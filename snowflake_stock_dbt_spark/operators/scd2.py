@@ -55,42 +55,45 @@ def scd2_apply(
 
     ``batch`` must hold one row per key (pre-aggregate a multi-observation
     batch to its latest row first — latest_wins does exactly that).
+
+    ``history`` is read once per step, so a chain of n steps plans O(n) scans.
     """
     keys = [key] if isinstance(key, str) else list(key)
-    cur = history.where(F.col("is_current")).alias("c")
-    closed_history = history.where(~F.col("is_current"))
+    h = history.alias("h")
     b = batch.alias("b")
 
-    joined = cur.join(b, [F.col(f"c.{k}") == F.col(f"b.{k}") for k in keys], "full_outer")
+    # One full outer join of the whole history, where only current rows can
+    # match; each joined row then emits its 1-2 output rows.
+    on = [F.col(f"h.{k}") == F.col(f"b.{k}") for k in keys]
+    joined = h.join(b, [*on, F.col("h.is_current")], "full_outer")
+    # is_current is never NULL on a history row, so it marks the h side.
+    hist_present = F.col("h.is_current").isNotNull()
     batch_present = F.col(f"b.{keys[0]}").isNotNull()
-    cur_present = F.col(f"c.{keys[0]}").isNotNull()
-    changed = cur_present & batch_present & _any_differs(tracked, "c", "b")
+    # Only a current row can have a batch partner, so this implies current.
+    changed = hist_present & batch_present & _any_differs(tracked, "h", "b")
 
-    hist_cols = [*keys, *tracked, "valid_from", "valid_to", "is_current"]
-
-    # Current rows carried or closed (key vanished from batch => carried).
-    kept_current = joined.where(cur_present).select(
-        *[F.col(f"c.{k}").alias(k) for k in keys],
-        *[F.col(f"c.{t}").alias(t) for t in tracked],
-        F.col("c.valid_from").alias("valid_from"),
+    # History row: carried untouched, or closed when its key changed.
+    hist_row = F.struct(
+        *[F.col(f"h.{c}").alias(c) for c in [*keys, *tracked, "valid_from"]],
         F.when(changed, F.col(f"b.{ts_col}"))
-        .otherwise(F.col("c.valid_to"))
+        .otherwise(F.col("h.valid_to"))
         .alias("valid_to"),
-        (~changed).alias("is_current"),
+        (F.col("h.is_current") & ~changed).alias("is_current"),
     )
-    # Newly opened rows: changed keys + brand-new keys.
-    opened = joined.where(batch_present & (changed | ~cur_present)).select(
-        *[F.col(f"b.{k}").alias(k) for k in keys],
-        *[F.col(f"b.{t}").alias(t) for t in tracked],
+    # Newly opened row: changed keys + brand-new keys.
+    opened_row = F.struct(
+        *[F.col(f"b.{c}").alias(c) for c in [*keys, *tracked]],
         F.col(f"b.{ts_col}").alias("valid_from"),
         F.lit(None).cast(batch.schema[ts_col].dataType).alias("valid_to"),
         F.lit(True).alias("is_current"),
     )
-    return (
-        closed_history.select(*hist_cols)
-        .unionByName(kept_current)
-        .unionByName(opened)
+    rows = F.array(
+        F.when(hist_present, hist_row),
+        F.when(batch_present & (changed | ~hist_present), opened_row),
     )
+    out = joined.select(F.inline(F.filter(rows, lambda r: r.isNotNull())))
+    # inline marks every field nullable; is_current never is NULL.
+    return out.withColumn("is_current", F.coalesce("is_current", F.lit(False)))
 
 
 def scd2_history_from(ev: DataFrame, weight_col: str | None = None) -> DataFrame:

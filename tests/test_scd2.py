@@ -140,3 +140,31 @@ def test_scd2_random_batch_sequence_invariants(spark):
         for a, b2 in zip(versions, versions[1:]):
             assert a["valid_to"] == b2["valid_from"], f"key {k}: range gap"
         assert versions[-1]["valid_to"] is None
+
+
+def _leaf_count(df):
+    """Leaves of the analyzed logical plan: one per scan the plan reads."""
+    return df._jdf.queryExecution().analyzed().collectLeaves().size()
+
+
+def test_scd2_chain_plan_grows_linearly(spark):
+    """Each apply reads ``history`` once, so a chain's analyzed plan grows
+    by a constant number of leaves per step. An apply that re-reads
+    ``history`` k > 1 times grows it as k**n, and a months-long chain then
+    plans thousands of scans. Nothing is collected: this pins the plan
+    shape, independent of how much memory running it would take."""
+    hist = None
+    leaves = []
+    for n in range(1, 9):
+        color = "red" if n % 2 else "blue"
+        b = _batch(spark, [(1, color, "S", f"2024-{n:02d}-01 00:00:00")])
+        if hist is None:
+            hist = scd2_initial(b, "ts")
+        else:
+            hist = scd2_apply(hist, b, "k", ["color", "size"], "ts")
+        leaves.append(_leaf_count(hist))
+        # Checked as the chain grows, so a superlinear plan fails before
+        # its analysis gets expensive.
+        if n >= 5:
+            steps = [b2 - a for a, b2 in zip(leaves[2:], leaves[3:])]
+            assert len(set(steps)) == 1, f"leaves per chain length: {leaves}"
