@@ -223,102 +223,6 @@ def _load_micro() -> dict[str, float] | None:
         return None
 
 
-def _extract_queries(path: str) -> dict[str, float] | None:
-    """Per-query seconds from a BENCH_r{N}.json, whatever its shape.
-
-    The driver wraps bench.py's stdout line as {"tail": "<truncated line>",
-    "parsed": ...}; the raw shape is the line itself. The tail may be cut
-    mid-JSON, so the queries object is brace-matched out of the string
-    rather than parsed as a document.
-    """
-    try:
-        with open(path) as f:
-            data = json.load(f)
-    except Exception as exc:
-        print(f"[bench] cannot read {path}: {exc!r}", file=sys.stderr)
-        return None
-    if not isinstance(data, dict):
-        return None
-    for candidate in (data, data.get("parsed")):
-        if isinstance(candidate, dict) and isinstance(
-            candidate.get("queries"), dict
-        ):
-            return candidate["queries"]
-    tail = data.get("tail")
-    if isinstance(tail, str):
-        m = re.search(r'"queries"\s*:\s*\{', tail)
-        if m:
-            start = m.end() - 1
-            depth = 0
-            for i in range(start, len(tail)):
-                if tail[i] == "{":
-                    depth += 1
-                elif tail[i] == "}":
-                    depth -= 1
-                    if depth == 0:
-                        try:
-                            return json.loads(tail[start : i + 1])
-                        except Exception:
-                            break
-        # The driver may truncate the FRONT of the line (tail starts
-        # mid-object, no '"queries": {' marker). Scavenge whatever
-        # well-formed "qNN_name": seconds pairs survive — a partial
-        # baseline still catches regressions on the covered queries.
-        pairs = dict(
-            (k, float(v))
-            for k, v in re.findall(
-                r'"(q\d+[A-Za-z0-9_]*)"\s*:\s*([0-9]+(?:\.[0-9]+)?)', tail
-            )
-        )
-        if pairs:
-            return pairs
-    return None
-
-
-def _extract_micro(path: str) -> dict[str, float] | None:
-    """The embedded ``micro`` medians object from a BENCH_r{N}.json,
-    tolerant of the driver's tail-truncated wrapping (same contract as
-    :func:`_extract_queries`)."""
-    try:
-        with open(path) as f:
-            data = json.load(f)
-    except Exception:
-        return None
-    if not isinstance(data, dict):
-        return None
-    for candidate in (data, data.get("parsed")):
-        if isinstance(candidate, dict) and isinstance(
-            candidate.get("micro"), dict
-        ):
-            return {
-                k: float(v)
-                for k, v in candidate["micro"].items()
-                if not k.startswith("_")
-            }
-    tail = data.get("tail")
-    if isinstance(tail, str):
-        m = re.search(r'"micro"\s*:\s*\{', tail)
-        if m:
-            start = m.end() - 1
-            depth = 0
-            for i in range(start, len(tail)):
-                if tail[i] == "{":
-                    depth += 1
-                elif tail[i] == "}":
-                    depth -= 1
-                    if depth == 0:
-                        try:
-                            obj = json.loads(tail[start : i + 1])
-                            return {
-                                k: float(v)
-                                for k, v in obj.items()
-                                if not k.startswith("_")
-                            }
-                        except Exception:
-                            break
-    return None
-
-
 def _committed_full() -> tuple[dict[str, float], dict[str, float], str] | None:
     """(queries, micro, label) from the BENCH_FULL.json committed at git
     HEAD — the previous round-close record once rounds >= 11 commit it.
@@ -356,9 +260,8 @@ def compare_to_previous_round(
     """Per-query regression report against the previous round's numbers;
     returns the top movers (both directions) for the compact summary.
 
-    Baseline preference: the committed BENCH_FULL.json (complete
-    per-query map, rounds >= 11), else the latest BENCH_r{N}.json tail
-    (rounds <= 10 — brace-matched/scavenged, possibly partial).
+    Baseline: the committed BENCH_FULL.json (complete per-query map);
+    without one there is nothing to compare against and this returns {}.
 
     The acceptance bar is "within 2x of the previous round per query"; a
     suite total hides a single regressed plan, so name each one (ratio > 2x
@@ -372,26 +275,15 @@ def compare_to_previous_round(
     have produced repeated false drift alarms (round-4 adjudication,
     PLANS.md) — medians of fresh-process reps are the comparable signal.
     """
-    import glob
-
-    here = os.path.dirname(os.path.abspath(__file__))
     committed = _committed_full()
-    if committed is not None:
-        prev, prev_micro, label = committed
-    else:
-        rounds = sorted(glob.glob(os.path.join(here, "BENCH_r*.json")))
-        if not rounds:
-            return {}
-        prev = _extract_queries(rounds[-1])
-        if prev is None:
-            print(
-                f"[bench] no per-query baseline parseable from {rounds[-1]}; "
-                "regression check skipped",
-                file=sys.stderr,
-            )
-            return {}
-        prev_micro = _extract_micro(rounds[-1])
-        label = os.path.basename(rounds[-1])
+    if committed is None:
+        print(
+            "[bench] no committed BENCH_FULL.json baseline; "
+            "regression check skipped",
+            file=sys.stderr,
+        )
+        return {}
+    prev, prev_micro, label = committed
     regressed = []
     deltas: list[tuple[float, str, float, float]] = []
     for name, sec in sorted(times.items()):

@@ -410,6 +410,9 @@ def pagerank(
 
     The vertex count is collected once at setup (one count job); a fixed
     scalar beats re-deriving |V| with a broadcast join every round.
+
+    Release contract: the edge frames stay persisted after the caller's
+    action until ``release_persisted_frames()`` or ``clearCache()``.
     """
     from .similarity import register_persisted
 
@@ -649,6 +652,9 @@ def label_propagation(
     (node, label) count agg + one per-node argmax window — all keyed on
     vertex id, the pagerank shuffle shape; rounds stay lazy (linear
     recurrence) with a lineage-bounding checkpoint every 4th round.
+
+    Release contract: the edge frame stays persisted after the caller's
+    action until ``release_persisted_frames()`` or ``clearCache()``.
     """
     from .similarity import register_persisted
 

@@ -96,7 +96,7 @@ def scd2_apply(
     return out.withColumn("is_current", F.coalesce("is_current", F.lit(False)))
 
 
-def scd2_history_from(ev: DataFrame, weight_col: str | None = None) -> DataFrame:
+def scd2_history_from(ev: DataFrame) -> DataFrame:
     """Run-length SCD2 history of ``event_type`` per user from an event
     log (q75's core, moved here from plans/events.py in round 8 so the
     incremental extend below can build on it): one row per run with the
@@ -105,18 +105,12 @@ def scd2_history_from(ev: DataFrame, weight_col: str | None = None) -> DataFrame
     column (two adjacent runs can share valid_from_us when consecutive
     events of different types carry the identical microsecond ts, so
     downstream as-of tiebreaks must use run_id, not valid_from_us).
-
-    ``weight_col``: optional per-event weight summed into ``n_events``
-    instead of counting rows — how :func:`scd2_extend_from_log` folds an
-    entire prior run into one seed row without replaying its events.
     """
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    wcol = F.col(weight_col) if weight_col else F.lit(1)
     flagged = ev.select(
         "user_id",
         "event_type",
         "event_id",
-        wcol.cast("long").alias("__w"),
         F.unix_micros("ts").alias("us"),
         F.when(
             F.lag("event_type").over(w).isNull()
@@ -137,7 +131,7 @@ def scd2_history_from(ev: DataFrame, weight_col: str | None = None) -> DataFrame
     seg = runs.groupBy("user_id", "run_id").agg(
         F.min("event_type").alias("event_type"),
         F.min("us").alias("valid_from_us"),
-        F.sum("__w").alias("n_events"),
+        F.count("*").alias("n_events"),
     )
     wseg = Window.partitionBy("user_id").orderBy("run_id")
     return seg.select(
@@ -155,49 +149,63 @@ def scd2_extend_from_log(history: DataFrame, tail: DataFrame) -> DataFrame:
     (the :func:`scd2_history_from` shape, WITH run_id) by a new batch of
     events — without replaying any already-folded event.
 
-    The only runs a new batch can change are each affected user's
-    CURRENT run (it may extend, or close when the batch opens a new
-    type), so the recompute is bounded by |batch| + one seed row per
-    affected user: the current run collapses into a single weighted seed
-    event (ts = its valid_from, weight = its n_events — every batch
-    event postdates it because batches arrive in time order), runs are
-    re-derived over seed+batch only, and run_ids are shifted to continue
-    the user's existing numbering. Untouched users and already-closed
-    runs are carried through without a shuffle beyond the key anti/semi
-    joins. EXACT parity with a full rebuild — extend(scd2(log≤t), tail)
-    == scd2(full log) row-for-row — is the operator's contract (q331's
-    oracle IS Q75_SQL).
+    The only run a batch can change is each affected user's CURRENT
+    run: it extends when the batch's first event has its type, and
+    closes otherwise. Every batch event postdates it (batches arrive in
+    time order), so the batch's own runs (:func:`scd2_history_from` over
+    the batch alone, collected per user) follow it, renumbered to
+    continue the user's run_ids. One full outer join of the whole
+    history with those per-user runs, matching only current rows, emits
+    every output row, so ``history`` is read once per extend and a chain
+    of n extends plans O(n) scans. EXACT parity with a full rebuild —
+    extend(scd2(log≤t), tail) == scd2(full log) row-for-row — is the
+    operator's contract (q331's oracle IS Q75_SQL).
     """
-    affected = tail.select("user_id").distinct()
-    kept = history.join(affected, "user_id", "left_anti")
-    aff = history.join(affected, "user_id", "left_semi")
-    cur = aff.where(F.col("valid_to_us").isNull())
-    closed = aff.where(F.col("valid_to_us").isNotNull())
-    seed = cur.select(
-        "user_id",
-        "event_type",
-        # sorts before every real event id at an (impossible) equal ts
-        F.lit(-1).cast("long").alias("event_id"),
-        F.timestamp_micros("valid_from_us").alias("ts"),
-        F.col("n_events").alias("__w"),
+    cols = ["run_id", "event_type", "valid_from_us", "valid_to_us", "n_events"]
+    runs = scd2_history_from(tail).groupBy("user_id").agg(
+        F.array_sort(F.collect_list(F.struct(*cols))).alias("runs")
     )
-    tail_w = tail.select(
-        "user_id",
-        "event_type",
-        F.col("event_id").cast("long").alias("event_id"),
-        "ts",
-        F.lit(1).cast("long").alias("__w"),
+    joined = history.alias("h").join(
+        runs.alias("t"),
+        (F.col("h.user_id") == F.col("t.user_id"))
+        & F.col("h.valid_to_us").isNull(),
+        "full_outer",
     )
-    recomputed = scd2_history_from(
-        seed.unionByName(tail_w), weight_col="__w"
+    h = {c: F.col(f"h.{c}") for c in ["user_id", *cols]}
+    first = F.element_at("t.runs", 1)
+    hist_present = h["run_id"].isNotNull()
+    matched = hist_present & F.col("t.user_id").isNotNull()
+    # scd2_history_from's change test, between the current run and the
+    # batch's first event.
+    changes = h["event_type"].isNull() | (h["event_type"] != first["event_type"])
+    extends = matched & ~F.coalesce(changes, F.lit(False))
+    hist_row = F.struct(
+        h["run_id"].alias("run_id"),
+        F.when(extends, F.least(h["event_type"], first["event_type"]))
+        .otherwise(h["event_type"])
+        .alias("event_type"),
+        h["valid_from_us"].alias("valid_from_us"),
+        F.when(extends, first["valid_to_us"])
+        .when(matched, first["valid_from_us"])
+        .otherwise(h["valid_to_us"])
+        .alias("valid_to_us"),
+        F.when(extends, h["n_events"] + first["n_events"])
+        .otherwise(h["n_events"])
+        .alias("n_events"),
+        h["user_id"].alias("user_id"),
     )
-    offsets = cur.select("user_id", (F.col("run_id") - 1).alias("__off"))
-    shifted = recomputed.join(offsets, "user_id", "left").select(
-        "user_id",
-        (F.col("run_id") + F.coalesce("__off", F.lit(0))).alias("run_id"),
-        "event_type",
-        "valid_from_us",
-        "valid_to_us",
-        "n_events",
+    # When the current run extends, the batch's first run is folded in.
+    skip = extends.cast("int")
+    off = F.coalesce(h["run_id"] - skip, F.lit(0))
+    batch_rows = F.transform(
+        F.filter("t.runs", lambda r: r["run_id"] > skip),
+        lambda r: r.withField("run_id", r["run_id"] + off).withField(
+            "user_id", F.coalesce(h["user_id"], F.col("t.user_id"))
+        ),
     )
-    return kept.unionByName(closed).unionByName(shifted)
+    rows = F.concat(
+        F.array(F.when(hist_present, hist_row)),
+        F.coalesce(batch_rows, F.array()),
+    )
+    out = joined.select(F.inline(F.filter(rows, lambda r: r.isNotNull())))
+    return out.select("user_id", *cols)

@@ -24,8 +24,9 @@ holds a bounded candidate set.
 from __future__ import annotations
 
 import os
+from functools import partial
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..functions.localframe import local_frame
@@ -37,6 +38,7 @@ from ..functions.vectors import (
     dot_exact_lits,
     norm_exact,
 )
+from ..sources.tables import session_memo
 
 def cosine_topk_exact(
     queries: DataFrame,
@@ -824,14 +826,14 @@ def _shared_probe_frame(
     ):
         return None
     depth = max(nprobe, BALANCE_SPILL_DEPTH)
-    pr = _with_probes(
-        ensure_min_parallelism(corpus, F.col(id_col)),
-        centroids,
-        vec_col,
-        depth,
-    ).persist()
-    _PERSISTED_FRAMES.append(pr)
-    return pr
+    return register_persisted(
+        _with_probes(
+            ensure_min_parallelism(corpus, F.col(id_col)),
+            centroids,
+            vec_col,
+            depth,
+        )
+    )
 
 
 def _balanced_posting_frame(pr: DataFrame, id_col: str, k: int) -> DataFrame:
@@ -843,8 +845,9 @@ def _balanced_posting_frame(pr: DataFrame, id_col: str, k: int) -> DataFrame:
     OUTPUT (the exploded candidate set) concentrated 35 s of Hamming +
     window work on those tasks (vs the natural arm's broadcast-joined
     32-task stage). Registered for the sweep/bench release discipline."""
-    posting = balanced_posting(pr, id_col, _posting_cap(pr, k)).persist()
-    _PERSISTED_FRAMES.append(posting)
+    posting = register_persisted(
+        balanced_posting(pr, id_col, _posting_cap(pr, k))
+    )
     posting.count()
     return posting
 
@@ -931,17 +934,18 @@ def split_oversized_blocks(
     )
 
 
-#: Session-scoped registry of frames persisted by _stabilize_assigned —
-#: they must outlive the multi-consumer plan they anchor (unknown at
-#: persist time), so release is explicit: long-lived harnesses (oracle
-#: sweep, probe loops) call :func:`release_persisted_frames` between
-#: queries; bench.py's per-query ``spark.catalog.clearCache()`` drops
-#: the blocks too (the registry then just forgets dead handles).
+#: Session-scoped registry of frames persisted through
+#: :func:`register_persisted` — they must outlive the multi-consumer plan
+#: they anchor (unknown at persist time), so release is explicit:
+#: long-lived harnesses (oracle sweep, probe loops) call
+#: :func:`release_persisted_frames` between queries; bench.py's per-query
+#: ``spark.catalog.clearCache()`` drops the blocks too (the registry then
+#: just forgets dead handles).
 _PERSISTED_FRAMES: list[DataFrame] = []
 
 
 def release_persisted_frames() -> int:
-    """Unpersist every frame _stabilize_assigned cached this session
+    """Unpersist every frame register_persisted cached this session
     (ADVICE r9: over a long sweep these accumulated in the storage
     layer). Returns the number released; safe to call at any time —
     consumers that re-touch a released frame recompute it lazily."""
@@ -969,6 +973,8 @@ def register_persisted(df: DataFrame) -> DataFrame:
         except Exception:
             return False
 
+    # Drop dead handles first (ADVICE r10): spark.catalog.clearCache()
+    # frees the blocks but not the DataFrame/plan references held here.
     _PERSISTED_FRAMES[:] = [f for f in _PERSISTED_FRAMES if _alive(f)]
     df = df.persist()
     _PERSISTED_FRAMES.append(df)
@@ -988,58 +994,57 @@ def _stabilize_assigned(out: DataFrame, k: int) -> DataFrame:
     the LSH band-frame persist discipline (PLANS.md journal #2/#6).
     Never active at oracle/bench corpora (k < 64 everywhere below the
     probe scale factors), so pinned plans and budgets are untouched."""
-    if k >= TWO_LEVEL_MIN_K:
-        # Drop dead handles first (ADVICE r10): harnesses that reset via
-        # spark.catalog.clearCache() (bench.py) free the blocks but the
-        # registry kept DataFrame/plan references alive for the whole
-        # session — prune entries whose storage level is no longer
-        # cached before appending, so the registry tracks live state.
-        def _alive(f: DataFrame) -> bool:
-            try:
-                lvl = f.storageLevel
-                return lvl.useMemory or lvl.useDisk
-            except Exception:
-                return False
-
-        _PERSISTED_FRAMES[:] = [f for f in _PERSISTED_FRAMES if _alive(f)]
-        out = out.persist()
-        _PERSISTED_FRAMES.append(out)
-        return out
-    return out
-
-
-_KMEANS_TRAIN_CACHE: dict[tuple, list] = {}
+    return register_persisted(out) if k >= TWO_LEVEL_MIN_K else out
 
 
 def preload_trained_codebook(
-    cache_key: tuple, k: int, iters: int, centroids: list[tuple[int, list[int]]]
+    spark: SparkSession, cache_key: tuple, k: int, iters: int, centroids: list
 ) -> None:
-    """Warm the training cache with a codebook LOADED from a persisted
+    """Seed the training memo with a codebook LOADED from a persisted
     index artifact (sinks/ann_index.py): subsequent kmeans_assign calls
     with the same (cache_key, k, iters) consume the loaded state instead
     of retraining — how a search job restores a trained quantizer from
-    the lake. Deterministic training means loaded == would-be-trained;
+    the lake. A codebook already memoized for the same corpus state is
+    kept: deterministic training means loaded == would-be-trained, and
     the q318/q322 parity oracles fail loudly if the artifact drifts."""
-    _KMEANS_TRAIN_CACHE[(*cache_key, k, iters)] = [
-        (int(b), [int(v) for v in cv]) for b, cv in centroids
-    ]
+    path, *tag = cache_key
+    loaded = [(int(b), [int(v) for v in cv]) for b, cv in centroids]
+    session_memo(spark, path, ("kmeans", *tag, k, iters), lambda: loaded)
 
 
-def _cached_assign(corpus, centroids, vec_col, attach):
-    """Assignment-only pass with an already-trained codebook — the
-    shared _with_probes scan at nprobe=1: below TWO_LEVEL_MIN_K the flat
-    fused scan, an exact argmin; at k >= TWO_LEVEL_MIN_K the pinned
-    deterministic beam approximation (see _with_probes — can differ from
-    the flat argmin near cluster boundaries, agreement floor pinned in
-    tests/test_round9_properties.py)."""
-    out = _with_probes(corpus, centroids, vec_col, nprobe=1, attach_cq=attach)
+def _assign(df: DataFrame, centroids, vec_col: str, attach: bool) -> DataFrame:
+    """Argmin assignment of ``df`` to a trained codebook."""
+    # Centroids travel as BROADCAST DATA (one packed row), not plan
+    # literals: a least() over k literal structs grows the expression
+    # tree O(k*dim) and blew up analysis/codegen once k became
+    # size-derived (q118's k ∝ n SemDeDup contract — round-3 VERDICT
+    # item 1; measured 8.5→74s at 4x before this change). The argmin
+    # itself is the shared _with_probes scan — flat fused fold below
+    # TWO_LEVEL_MIN_K (exact, bit-identical to the unrolled SQL
+    # oracle), the pinned deterministic beam approximation above it
+    # (round-8 VERDICT item 1: the flat n·k assign was the family's
+    # measured superlinear tail; near cluster boundaries the beam can
+    # differ from the flat argmin — agreement floor pinned in tests) —
+    # ties to the smallest bucket id in both modes.
+    out = _with_probes(df, centroids, vec_col, nprobe=1, attach_cq=attach)
     best = F.element_at(F.col("__probes"), 1)
     out = out.withColumn("bucket", best["bucket"])
     if attach:
+        # The argmin struct already carries the winning centroid and its
+        # exact integer squared distance — PQ encoding (q145) reads both
+        # for free.
         out = out.withColumn("centroid_q", best["cq"]).withColumn(
             "sq_err", best["d"]
         )
-    return _stabilize_assigned(out.drop("__probes", "__qq"), len(centroids))
+    return out.drop("__probes", "__qq")
+
+
+def _cached_assign(corpus, centroids, vec_col, attach):
+    """Assignment-only pass with a trained codebook, persisted when the
+    two-level probe path is active (see _stabilize_assigned)."""
+    return _stabilize_assigned(
+        _assign(corpus, centroids, vec_col, attach), len(centroids)
+    )
 
 
 def kmeans_assign(
@@ -1084,23 +1089,34 @@ def kmeans_assign(
     per-round cluster sums to the driver the same way). Empty buckets drop
     out deterministically on both engines.
     """
-    from ..functions.text import hash60
-
-    if cache_key is not None:
+    train = partial(_train_codebook, corpus, id_col, vec_col, k, iters)
+    if cache_key is None:
+        cent = train()
+    else:
         # Deterministic training means identical (corpus, k, iters)
         # always yields the identical codebook — callers that train the
         # same model in several registered queries (q106's coarse ==
-        # q150's; q145's PQ codebooks == q150's) pass a key naming the
-        # corpus so the loop runs once per session. The cached object is
-        # the k x dim centroid list — the same bounded driver state the
-        # loop ends with.
-        full_key = (*cache_key, k, iters)
-        cached = _KMEANS_TRAIN_CACHE.get(full_key)
-        if cached is not None:
-            assigned = _cached_assign(
-                corpus, cached, vec_col, attach_centroid
-            )
-            return (assigned, cached) if return_centroids else assigned
+        # q150's; q145's PQ codebooks == q150's) pass a key
+        # ``(corpus path, *tag)`` so the loop runs once per corpus state.
+        # The memoized object is the k x dim centroid list — the same
+        # bounded driver state the loop ends with.
+        path, *tag = cache_key
+        cent = session_memo(
+            corpus.sparkSession, path, ("kmeans", *tag, k, iters), train
+        )
+    assigned = _cached_assign(corpus, cent, vec_col, attach_centroid)
+    if return_centroids:
+        # The trained codebook is k x dim ints of driver state (the same
+        # bounded state the training loop already held) — IVF-PQ's ADC
+        # search needs it to build per-query lookup tables.
+        return assigned, cent
+    return assigned
+
+
+def _train_codebook(corpus, id_col, vec_col, k, iters) -> list:
+    """kmeans_assign's seeding and ``iters`` Lloyd rounds -> the sorted
+    (bucket, centroid) list."""
+    from ..functions.text import hash60
 
     seed_rows = (
         corpus.select(
@@ -1117,35 +1133,9 @@ def kmeans_assign(
     cent: list[tuple[int, list[int]]] = [
         (b, [int(v) for v in r["__q"]]) for b, r in enumerate(seed_rows)
     ]
-
-    def assign_with(df: DataFrame, centroids, attach: bool = False) -> DataFrame:
-        # Centroids travel as BROADCAST DATA (one packed row), not plan
-        # literals: a least() over k literal structs grows the expression
-        # tree O(k*dim) and blew up analysis/codegen once k became
-        # size-derived (q118's k ∝ n SemDeDup contract — round-3 VERDICT
-        # item 1; measured 8.5→74s at 4x before this change). The argmin
-        # itself is the shared _with_probes scan — flat fused fold below
-        # TWO_LEVEL_MIN_K (exact, bit-identical to the unrolled SQL
-        # oracle), the pinned deterministic beam approximation above it
-        # (round-8 VERDICT item 1: the flat n·k assign was the family's
-        # measured superlinear tail; near cluster boundaries the beam can
-        # differ from the flat argmin — agreement floor pinned in tests) —
-        # ties to the smallest bucket id in both modes.
-        out = _with_probes(df, centroids, vec_col, nprobe=1, attach_cq=attach)
-        best = F.element_at(F.col("__probes"), 1)
-        out = out.withColumn("bucket", best["bucket"])
-        if attach:
-            # The argmin struct already carries the winning centroid and
-            # its exact integer squared distance — PQ encoding (q145)
-            # reads both for free.
-            out = out.withColumn("centroid_q", best["cq"]).withColumn(
-                "sq_err", best["d"]
-            )
-        return out.drop("__probes", "__qq")
-
     c = ensure_min_parallelism(corpus, F.col(id_col))
     for _ in range(iters):
-        assigned = assign_with(c, cent).select(
+        assigned = _assign(c, cent, vec_col, False).select(
             "bucket", _quantized(vec_col).alias("__qv")
         )
         if k >= TWO_LEVEL_MIN_K:
@@ -1168,17 +1158,7 @@ def kmeans_assign(
         if k >= TWO_LEVEL_MIN_K:
             assigned.unpersist()
         cent = sorted((r["bucket"], [int(v) for v in r["cq"]]) for r in cent_rows)
-    if cache_key is not None:
-        _KMEANS_TRAIN_CACHE[(*cache_key, k, iters)] = cent
-    assigned = _stabilize_assigned(
-        assign_with(corpus, cent, attach=attach_centroid), k
-    )
-    if return_centroids:
-        # The trained codebook is k x dim ints of driver state (the same
-        # bounded state the training loop already held) — IVF-PQ's ADC
-        # search needs it to build per-query lookup tables.
-        return assigned, cent
-    return assigned
+    return cent
 
 
 #: Random-hyperplane LSH configuration: 16 sign bits in 4 bands of 4.

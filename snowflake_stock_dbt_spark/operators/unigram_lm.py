@@ -38,25 +38,20 @@ documents again until the encode join, where the trained
 
 from __future__ import annotations
 
+from functools import partial
+
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.partitioning import ensure_min_parallelism
 from ..functions.text import tokens
+from ..sources.tables import session_memo
 
 UL_MAXLEN = 12  # words longer than this are excluded from the model
 UL_PIECE_MAX = 4  # max piece length (chars)
 UL_SEED_MIN = 20  # min corpus count for a multi-char seed piece
 UL_PRUNE_MIN = 20  # min E-step usage for a multi-char piece to survive
 UL_ROUNDS = 2  # hard-EM rounds
-
-#: (session id, sf marker) -> localCheckpoint'ed final segmentation DF.
-#: q320 (train) and q321 (encode) share one trained model per session —
-#: the same memoization contract as similarity._KMEANS_TRAIN_CACHE, but
-#: DataFrame-valued because the word inventory is NOT driver-bounded at
-#: cluster scale (it is vocabulary-sized, not k-sized).
-_TRAIN_CACHE: dict[tuple, DataFrame] = {}
-
 
 def unigram_words(docs: DataFrame, text_col: str = "text") -> DataFrame:
     """(word, cnt) inventory over whitespace tokens, length-capped."""
@@ -178,11 +173,12 @@ def unigram_train(
     encoder joins it (q321). The vocab dict collected per round is
     bounded driver state (thresholded subword inventory); the word
     inventory itself stays distributed. localCheckpoint'ed so the
-    two consumers don't replay the EM chain."""
+    two consumers don't replay the EM chain, and ``cache_key`` =
+    ``(corpus path, *tag)`` shares one model per corpus state."""
     if cache_key is not None:
-        cached = _TRAIN_CACHE.get(cache_key)
-        if cached is not None:
-            return cached
+        path, *tag = cache_key
+        build = partial(unigram_train, docs, text_col)
+        return session_memo(docs.sparkSession, path, ("unigram", *tag), build)
     words = ensure_min_parallelism(
         unigram_words(docs, text_col), F.col("word")
     )
@@ -206,6 +202,4 @@ def unigram_train(
                 }
             )
         segs = viterbi_segment(words, vocab).localCheckpoint(eager=False)
-    if cache_key is not None:
-        _TRAIN_CACHE[cache_key] = segs
     return segs

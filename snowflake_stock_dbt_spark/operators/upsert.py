@@ -102,15 +102,14 @@ def merge_upsert_write(
             full.write.mode("overwrite").partitionBy(partition_col).parquet(path)
             full.unpersist()
             return
-        prior = spark.conf.get("spark.sql.sources.partitionOverwriteMode", None)
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-        try:
-            merged.write.mode("overwrite").partitionBy(partition_col).parquet(path)
-        finally:
-            if prior is None:
-                spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
-            else:
-                spark.conf.set("spark.sql.sources.partitionOverwriteMode", prior)
+        # Per-write dynamic overwrite: replaces only the written
+        # partitions and leaves the session conf alone.
+        (
+            merged.write.mode("overwrite")
+            .option("partitionOverwriteMode", "dynamic")
+            .partitionBy(partition_col)
+            .parquet(path)
+        )
         merged.unpersist()
     else:
         merged = merge_upsert(target, source, key)

@@ -36,6 +36,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from ..dbt import DbtProjectRunner, schema_tests_df
+from ..sources.tables import session_memo
 from .worksheets import (
     CLOCK,
     SCRAPE_FEED_CTES,
@@ -52,22 +53,18 @@ def dbt_available() -> bool:
     return os.path.isdir(os.path.join(REFERENCE_DBT_DIR, "models"))
 
 
-_dbt_runs: dict[tuple[int, str], dict[str, DataFrame]] = {}
-
-
 def run_dbt_project(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
     """Materialize the reference dbt DAG on top of the worksheet-verbatim
-    load session. Memoized per (SparkSession, sf_dir) like the load run —
-    models stay lazy; only parse/plan construction is shared."""
-    key = (id(spark), sf_dir)
-    if key in _dbt_runs:
-        return _dbt_runs[key]
-    runner, _ = run_load_worksheets(spark, sf_dir)
-    proj = DbtProjectRunner(runner)
-    proj.add_source("raw", "most_actives_raw", "most_actives_raw")
-    models = proj.run_models(os.path.join(REFERENCE_DBT_DIR, "models"))
-    _dbt_runs[key] = models
-    return models
+    load session. Memoized per corpus state like the load run — models
+    stay lazy; only parse/plan construction is shared."""
+
+    def run() -> dict[str, DataFrame]:
+        runner, _ = run_load_worksheets(spark, sf_dir)
+        proj = DbtProjectRunner(runner)
+        proj.add_source("raw", "most_actives_raw", "most_actives_raw")
+        return proj.run_models(os.path.join(REFERENCE_DBT_DIR, "models"))
+
+    return session_memo(spark, sf_dir, "dbt_project", run)
 
 
 def _driver_safe(df: DataFrame, drop: tuple[str, ...] = ()) -> DataFrame:

@@ -44,7 +44,7 @@ from ..operators.textdedup import (
     simhash_signatures,
     winnowing_fingerprints,
 )
-from ..sources.tables import load_table
+from ..sources.tables import load_table, session_memo
 
 # Shared oracle CTE fragments -------------------------------------------------
 
@@ -847,20 +847,16 @@ Q116_SQL = _bpe_oracle_sql(_BPE_ROUNDS)
 # then aggregates the same digest per document.
 # ---------------------------------------------------------------------------
 
-_bpe_merges_cache: dict[tuple[int, str], list[tuple[str, str]]] = {}
-
-
 def _trained_merges(spark: SparkSession, sf_dir: str) -> list[tuple[str, str]]:
-    """Train-once-per-session merge list (n_merges rows of driver state —
-    the tokenizer artifact, same bounded-collect pattern as the per-round
-    argmax inside training)."""
-    key = (id(spark), sf_dir)
-    if key not in _bpe_merges_cache:
+    """Train-once-per-corpus-state merge list (n_merges rows of driver
+    state — the tokenizer artifact, same bounded-collect pattern as the
+    per-round argmax inside training)."""
+
+    def train() -> list[tuple[str, str]]:
         rows = q116_bpe_merges(spark, sf_dir).orderBy("round").collect()
-        _bpe_merges_cache[key] = [
-            (r["left_sym"], r["right_sym"]) for r in rows
-        ]
-    return _bpe_merges_cache[key]
+        return [(r["left_sym"], r["right_sym"]) for r in rows]
+
+    return session_memo(spark, sf_dir, "bpe_merges", train)
 
 
 def q132_bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -200,7 +200,18 @@ JOIN events p
 """
 
 
-_flush_landings: dict[str, str] = {}
+def _landing_path(kind: str, sf_dir: str) -> str:
+    """PID-keyed scratch landing dir for ``sf_dir``: concurrent processes
+    never share one (an ``overwrite`` in one would delete parquet parts
+    a scan in the other holds open)."""
+    import hashlib
+    import os
+    import tempfile
+
+    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
+    return os.path.join(
+        tempfile.gettempdir(), f"spark_graft_{kind}_{tag}_{os.getpid()}"
+    )
 
 
 def _flush_events_landing(spark: SparkSession, sf_dir: str) -> str:
@@ -228,23 +239,15 @@ def _flush_events_landing(spark: SparkSession, sf_dir: str) -> str:
     the sentinel day's window, which the final watermark never passes,
     so it is withheld in append mode and never pollutes output.
 
-    The path embeds the PID so concurrent processes never share a
-    landing dir (an ``overwrite`` in one would delete parquet parts a
-    scan in the other holds open). user_id -1 matches no real user; the
-    queries filter the sentinels' own rows back out. Memoized per
-    sf_dir (one write per process)."""
-    import hashlib
-    import os
-    import tempfile
+    user_id -1 matches no real user; the queries filter the sentinels'
+    own rows back out. Written once per corpus state (session_memo)."""
     from datetime import timedelta
 
-    from ..sources.tables import load_table
+    from ..sources.tables import load_table, session_memo
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_louter_{tag}_{os.getpid()}"
-    )
-    if path not in _flush_landings:
+    path = _landing_path("louter", sf_dir)
+
+    def write() -> str:
         ev = load_table(spark, sf_dir, "events").select(
             "event_id", "ts", "user_id", "event_type", "value", "props"
         )
@@ -261,8 +264,9 @@ def _flush_events_landing(spark: SparkSession, sf_dir: str) -> str:
             ev.schema,
         )
         ev.unionByName(sent).write.mode("overwrite").parquet(path)
-        _flush_landings[path] = path
-    return path
+        return path
+
+    return session_memo(spark, sf_dir, "flush_landing", write)
 
 
 def q142_stream_left_outer_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -507,30 +511,22 @@ def q196_sessionize_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.where(F.col("user_id") >= 0)
 
 
-_half_landings: dict[str, str] = {}
-
-
 def _odd_events_landing(spark: SparkSession, sf_dir: str) -> str:
     """The odd-event_id half of events, written to a PID-keyed scratch
     landing dir (q197 streams this half on top of the even half's batch
-    aggregate). Memoized per process, same discipline as
+    aggregate). Written once per corpus state, same discipline as
     _flush_events_landing."""
-    import hashlib
-    import os
-    import tempfile
+    from ..sources.tables import load_table, session_memo
 
-    from ..sources.tables import load_table
+    path = _landing_path("half", sf_dir)
 
-    tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
-    path = os.path.join(
-        tempfile.gettempdir(), f"spark_graft_half_{tag}_{os.getpid()}"
-    )
-    if path not in _half_landings:
+    def write() -> str:
         load_table(spark, sf_dir, "events").where(
             F.col("event_id") % 2 == 1
         ).write.mode("overwrite").parquet(path)
-        _half_landings[path] = path
-    return path
+        return path
+
+    return session_memo(spark, sf_dir, "half_landing", write)
 
 
 def q197_warmstart_totals_tws(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -35,7 +35,7 @@ from ..sources.tables import load_table
 
 def q320_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    segs = unigram_train(docs, cache_key=(id(spark), sf_dir))
+    segs = unigram_train(docs, cache_key=(sf_dir,))
     return (
         piece_usage(segs)
         .select(
@@ -49,7 +49,7 @@ def q320_unigram_train(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q321_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
-    segs = unigram_train(docs, cache_key=(id(spark), sf_dir))
+    segs = unigram_train(docs, cache_key=(sf_dir,))
     dw = (
         docs.select("doc_id", F.explode(tokens("text")).alias("word"))
         .where((F.col("word") != "") & (F.length("word") <= UL_MAXLEN))
@@ -57,7 +57,7 @@ def q321_unigram_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.count("*").cast("long").alias("cn"))
     )
     # No broadcast hint: the word inventory is NOT driver-bounded at
-    # cluster scale (unigram_lm._TRAIN_CACHE's posture) — let AQE pick
+    # cluster scale (unigram_lm.unigram_train's posture) — let AQE pick
     # the build side from runtime stats (round-7 ADVICE).
     return (
         dw.join(segs.select("word", "np"), "word")

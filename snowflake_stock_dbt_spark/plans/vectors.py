@@ -26,7 +26,7 @@ from ..operators.similarity import (
     lsh_hyperplanes,
     lsh_topk,
 )
-from ..sources.tables import load_table
+from ..sources.tables import load_table, session_memo
 
 N_QUERY_VECS = 5
 TOP_K = 3
@@ -389,7 +389,7 @@ def q106_ann_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     bucketed = kmeans_assign(
         emb, k=KMEANS_K, iters=KMEANS_ITERS,
-        cache_key=(id(spark), sf_dir, "full"),
+        cache_key=(sf_dir, "full"),
     )
     queries = emb.where(F.col("vec_id") < N_QUERY_VECS)
     out = ivf_topk_exact(
@@ -567,12 +567,10 @@ SEMDEDUP_THRESHOLD = 0.3
 SEMDEDUP_TARGET_CLUSTER = 64
 
 
-#: One corpus-size probe per (session, corpus): the k = ceil(n/target)
-#: contract needs n as a DRIVER int before training (it sizes the seed
-#: collect), so the count can't ride the lazy plan — but it can ride the
-#: same memoization discipline as the k-means codebook cache, so repeat
-#: q118 invocations (bench loops, the sweep) never re-scan for it.
-_SEMDEDUP_N_CACHE: dict = {}
+def _corpus_rows(spark: SparkSession, sf_dir: str, emb: DataFrame) -> int:
+    """The embeddings row count as a DRIVER int (k = ceil(n/target) sizes
+    the seed collect), memoized per corpus state."""
+    return session_memo(spark, sf_dir, "embeddings_rows", emb.count)
 
 
 def _size_derived_k(spark: SparkSession, sf_dir: str, emb: DataFrame) -> int:
@@ -580,15 +578,11 @@ def _size_derived_k(spark: SparkSession, sf_dir: str, emb: DataFrame) -> int:
     cluster count that keeps PER-BUCKET candidate work bounded (the q118
     contract; knn_graph's docstring names it as the requirement). At the
     oracle corpus (sf0.01, n=500) this is exactly KMEANS_K=8, so every
-    static unrolled-k oracle stays bit-correct where it is evaluated.
-    The corpus count is memoized per (session, corpus) — see
-    _SEMDEDUP_N_CACHE above."""
+    static unrolled-k oracle stays bit-correct where it is evaluated."""
     import math
 
-    n_key = (id(spark), sf_dir)
-    if n_key not in _SEMDEDUP_N_CACHE:
-        _SEMDEDUP_N_CACHE[n_key] = emb.count()
-    return max(1, math.ceil(_SEMDEDUP_N_CACHE[n_key] / SEMDEDUP_TARGET_CLUSTER))
+    n = _corpus_rows(spark, sf_dir, emb)
+    return max(1, math.ceil(n / SEMDEDUP_TARGET_CLUSTER))
 
 
 def q118_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -601,7 +595,7 @@ def q118_semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     k = _size_derived_k(spark, sf_dir, emb)
     bucketed = kmeans_assign(
-        emb, k=k, iters=KMEANS_ITERS, cache_key=(id(spark), sf_dir, "full")
+        emb, k=k, iters=KMEANS_ITERS, cache_key=(sf_dir, "full")
     )
     # At scale (k >= TWO_LEVEL_MIN_K — where kmeans_assign persists the
     # assigned frame, so the one extra |blocks|-row size agg is a cached
@@ -696,7 +690,7 @@ def q145_pq_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     return pq_encode(
         emb, dim=EMBED_DIM, m=PQ_M, k=PQ_K, iters=PQ_ITERS,
-        cache_key=(id(spark), sf_dir),
+        cache_key=(sf_dir,),
     )
 
 
@@ -827,7 +821,7 @@ def q150_ivfpq_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_k=PQ_K,
         iters=PQ_ITERS,
         topk=TOP_K,
-        cache_key=(id(spark), sf_dir),
+        cache_key=(sf_dir,),
     )
 
 
@@ -927,7 +921,7 @@ def q151_knn_graph(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb_k = _size_derived_k(spark, sf_dir, emb)
     bucketed, cent = kmeans_assign(
         emb, k=emb_k, iters=KMEANS_ITERS,
-        cache_key=(id(spark), sf_dir, "full"),
+        cache_key=(sf_dir, "full"),
         return_centroids=True,
     )
     out = knn_graph(
@@ -1511,7 +1505,7 @@ def q259_mutual_nn(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = _size_derived_k(spark, sf_dir, emb)
     bucketed, cent = kmeans_assign(
         emb, k=k, iters=KMEANS_ITERS,
-        cache_key=(id(spark), sf_dir, "full"),
+        cache_key=(sf_dir, "full"),
         return_centroids=True,
     )
     top1 = (
@@ -1584,7 +1578,7 @@ def q260_cluster_quality(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     assigned, cent = kmeans_assign(
         emb, k=KMEANS_K, iters=KMEANS_ITERS,
-        cache_key=(id(spark), sf_dir, "full"),
+        cache_key=(sf_dir, "full"),
         return_centroids=True, attach_centroid=True,
     )
     per_bucket = assigned.groupBy("bucket").agg(
@@ -1909,7 +1903,7 @@ def q318_ann_saved_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         k=KMEANS_K,
         iters=KMEANS_ITERS,
-        cache_key=(id(spark), sf_dir, "full"),
+        cache_key=(sf_dir, "full"),
         return_centroids=True,
     )
     path = ivf_index_path(sf_dir)
@@ -1966,7 +1960,7 @@ def q322_ivfpq_saved_index(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     emb = load_table(spark, sf_dir, "embeddings")
-    base = (id(spark), sf_dir)
+    base = (sf_dir,)
     width = EMBED_DIM // PQ_M
     _, coarse = kmeans_assign(
         emb,
@@ -1999,9 +1993,12 @@ def q322_ivfpq_saved_index(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"PQ index round-trip drift at {path}: loaded quantizer state "
             "differs from trained"
         )
-    preload_trained_codebook((*base, "full"), KMEANS_K, PQ_ITERS, lcoarse)
+    # The search runs under its own "loaded" key, so it consumes the
+    # LOADED quantizers even when this session trained the same ones.
+    loaded = (sf_dir, "loaded")
+    preload_trained_codebook(spark, (*loaded, "full"), KMEANS_K, PQ_ITERS, lcoarse)
     for j in range(PQ_M):
-        preload_trained_codebook((*base, f"sub{j}"), PQ_K, PQ_ITERS, lsubs[j])
+        preload_trained_codebook(spark, (*loaded, f"sub{j}"), PQ_K, PQ_ITERS, lsubs[j])
     queries = emb.where(F.col("vec_id") < N_QUERY_VECS)
     return ivfpq_search(
         emb,
@@ -2013,7 +2010,7 @@ def q322_ivfpq_saved_index(spark: SparkSession, sf_dir: str) -> DataFrame:
         pq_k=PQ_K,
         iters=PQ_ITERS,
         topk=TOP_K,
-        cache_key=base,
+        cache_key=loaded,
     )
 
 
@@ -2078,7 +2075,7 @@ def q332_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
         base,
         k=KMEANS_K,
         iters=KMEANS_ITERS,
-        cache_key=(id(spark), sf_dir, "maintbase"),
+        cache_key=(sf_dir, "maintbase"),
         return_centroids=True,
     )
     path = ivf_index_path(sf_dir) + "_maint"
@@ -2099,13 +2096,13 @@ def q332_ivf_index_append(spark: SparkSession, sf_dir: str) -> DataFrame:
     # in-memory state — the cache key is distinct so the frozen
     # assignment provably runs off disk state.
     preload_trained_codebook(
-        (id(spark), sf_dir, "maintload"), KMEANS_K, KMEANS_ITERS, loaded_cent
+        spark, (sf_dir, "maintload"), KMEANS_K, KMEANS_ITERS, loaded_cent
     )
     batch_bucketed = kmeans_assign(
         batch,
         k=KMEANS_K,
         iters=KMEANS_ITERS,
-        cache_key=(id(spark), sf_dir, "maintload"),
+        cache_key=(sf_dir, "maintload"),
     )
     append_ivf_postings(
         spark,
@@ -2267,7 +2264,7 @@ def q339_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
         emb,
         k=KMEANS_K,
         iters=KMEANS_ITERS,
-        cache_key=(id(spark), sf_dir, "full"),
+        cache_key=(sf_dir, "full"),
     )
     queries = emb.where(F.col("vec_id") < HN_ANCHORS)
     out = ivf_hard_negatives(
@@ -2421,7 +2418,7 @@ def q348_semantic_index_probe(
         base,
         k=sem_k,
         iters=KMEANS_ITERS,
-        cache_key=(id(spark), sf_dir, "sembase"),
+        cache_key=(sf_dir, "sembase"),
         return_centroids=True,
     )
     path = ivf_index_path(sf_dir) + "_semdedup"
@@ -2434,13 +2431,13 @@ def q348_semantic_index_probe(
     )
     loaded_cent, postings, _meta = load_ivf_index(spark, path)
     preload_trained_codebook(
-        (id(spark), sf_dir, "semload"), sem_k, KMEANS_ITERS, loaded_cent
+        spark, (sf_dir, "semload"), sem_k, KMEANS_ITERS, loaded_cent
     )
     batch_assigned = kmeans_assign(
         batch,
         k=sem_k,
         iters=KMEANS_ITERS,
-        cache_key=(id(spark), sf_dir, "semload"),
+        cache_key=(sf_dir, "semload"),
     )
     history = emb.join(postings, "vec_id")
     return semantic_index_probe(
@@ -2535,7 +2532,7 @@ def q350_knn_graph_bq(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb_k = _size_derived_k(spark, sf_dir, emb)
     bucketed, cent = kmeans_assign(
         emb, k=emb_k, iters=KMEANS_ITERS,
-        cache_key=(id(spark), sf_dir, "full"),
+        cache_key=(sf_dir, "full"),
         return_centroids=True,
     )
     return knn_graph_bq(
@@ -2633,10 +2630,10 @@ def q351_balanced_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     k = _size_derived_k(spark, sf_dir, emb)
     _bucketed, cent = kmeans_assign(
         emb, k=k, iters=KMEANS_ITERS,
-        cache_key=(id(spark), sf_dir, "full"),
+        cache_key=(sf_dir, "full"),
         return_centroids=True,
     )
-    n = _SEMDEDUP_N_CACHE[(id(spark), sf_dir)]
+    n = _corpus_rows(spark, sf_dir, emb)
     cap = max(1, math.ceil(BALANCE_DEMO_CAP_FACTOR * n / k))
     pr = _with_probes(emb, cent, "embedding", 4)
     posting = balanced_posting(pr, "vec_id", cap, passes=BALANCE_SPILL_PASSES)

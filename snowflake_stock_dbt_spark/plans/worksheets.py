@@ -42,7 +42,7 @@ import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ..sources.tables import register_views
+from ..sources.tables import register_views, session_memo
 from ..sqldialect import rewrite_stddev_exact
 from ..worksheet import (
     WorksheetRunner,
@@ -114,24 +114,22 @@ scrape_feed AS (
 
 _FEED_SELECT = f"WITH {SCRAPE_FEED_CTES} SELECT * FROM scrape_feed"
 
-_fixture_written: set[str] = set()
-
-
 def ensure_fixture_csv(spark: SparkSession, sf_dir: str) -> str:
-    """Write the scrape-feed CSV landing dir for ``sf_dir`` (idempotent
-    per process) and return its path.
+    """Write the scrape-feed CSV landing dir for ``sf_dir`` (once per
+    corpus state) and return its path.
 
     The path embeds the PID: an md5(sf_dir)-only key lets two concurrent
     processes share a dir, where one process's ``mode("overwrite")``
     deletes CSV parts out from under the other's running scan
     (FileNotFoundException — observed when a query sweep raced pytest).
-    Per-process dirs make the write race-free; the in-process memo set
-    keeps it one write per process."""
+    Per-process dirs make the write race-free; session_memo rewrites it
+    when the corpus changes."""
     tag = hashlib.md5(sf_dir.encode()).hexdigest()[:10]
     path = os.path.join(
         tempfile.gettempdir(), f"spark_graft_ws_{tag}_{os.getpid()}"
     )
-    if path not in _fixture_written:
+
+    def write() -> str:
         register_views(spark, sf_dir)
         (
             spark.sql(_FEED_SELECT)
@@ -140,11 +138,9 @@ def ensure_fixture_csv(spark: SparkSession, sf_dir: str) -> str:
             .option("header", True)
             .csv(path)
         )
-        _fixture_written.add(path)
-    return path
+        return path
 
-
-_load_runs: dict[tuple[int, str], tuple[WorksheetRunner, list[DataFrame]]] = {}
+    return session_memo(spark, sf_dir, "ws_fixture_csv", write)
 
 
 def run_load_worksheets(
@@ -157,20 +153,19 @@ def run_load_worksheets(
     (reference sql/02_load_data.sql:66-73, 170-175, 177-182).
 
     q107/q108/q109 are three views of ONE worksheet session, so the run
-    is memoized per (SparkSession, sf_dir) — the tables stay lazy; only
-    the script parse and plan construction are shared.
+    is memoized per corpus state — the tables stay lazy; only the script
+    parse and plan construction are shared.
     """
-    key = (id(spark), sf_dir)
-    if key in _load_runs:
-        return _load_runs[key]
-    landing = ensure_fixture_csv(spark, sf_dir)
-    runner = WorksheetRunner(spark, clock=CLOCK)
-    runner.register_stage("most_actives_stage", landing)
-    runner.run_script(_read_worksheet("01_create_tables.sql"))
-    results = runner.run_script(_read_worksheet("02_load_data.sql"))
-    selects = [r.df for r in results if r.kind == "select"]
-    _load_runs[key] = (runner, selects)
-    return _load_runs[key]
+
+    def run() -> tuple[WorksheetRunner, list[DataFrame]]:
+        landing = ensure_fixture_csv(spark, sf_dir)
+        runner = WorksheetRunner(spark, clock=CLOCK)
+        runner.register_stage("most_actives_stage", landing)
+        runner.run_script(_read_worksheet("01_create_tables.sql"))
+        results = runner.run_script(_read_worksheet("02_load_data.sql"))
+        return runner, [r.df for r in results if r.kind == "select"]
+
+    return session_memo(spark, sf_dir, "load_worksheets", run)
 
 
 def q107_ws_raw_validation(spark: SparkSession, sf_dir: str) -> DataFrame:

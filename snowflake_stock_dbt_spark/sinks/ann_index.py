@@ -32,13 +32,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from ..functions.localframe import local_frame
-
-# Shared artifact-store core (round-11: publish/load/memo live in ONE
-# module; _SAVED and _publish_atomically stay importable from here for
-# the established call sites and tests).
-from .artifact import (  # noqa: F401  (re-exported contract)
+from .artifact import (
     _SAVED,
-    _publish_atomically,
     artifact_path,
     load_artifact_meta,
     publish_artifact,

@@ -17,7 +17,7 @@ engine can read it:
   loudly (a probe against an index built with a DIFFERENT hash family
   would silently match nothing).
 
-Publish is staged + renamed (ann_index._publish_atomically): readers
+Publish is staged + renamed (artifact._publish_atomically): readers
 never observe parquet-without-meta.
 
 100 TB posture: the index is O(corpus × bands) three-column rows — one

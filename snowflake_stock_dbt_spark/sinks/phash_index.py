@@ -16,7 +16,7 @@ re-decoded or re-hashed. Layout, plain parquet so any engine reads it:
   count; a family-mismatched load raises instead of silently matching
   nothing.
 
-Publish is staged + renamed (ann_index._publish_atomically): readers
+Publish is staged + renamed (artifact._publish_atomically): readers
 never observe parquet-without-meta.
 
 100 TB posture: the artifact is O(|media| × bands) six-column rows —
@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 
 from ..operators.multimodal import PHASH_BANDS, PHASH_BAND_BITS
 from .artifact import (
-    _SAVED,
     artifact_path,
     load_artifact_meta,
     publish_artifact,

@@ -15,7 +15,7 @@ so any engine can read it:
   row count: a probe against an index built with a different family
   would silently match nothing, so a mismatched load raises instead.
 
-Publish is staged + renamed (ann_index._publish_atomically): readers
+Publish is staged + renamed (artifact._publish_atomically): readers
 never observe parquet-without-meta.
 
 100 TB posture: the index is O(corpus × bands) four-column rows — one
@@ -31,7 +31,6 @@ from pyspark.sql import functions as F
 
 from ..operators.textdedup import SIMHASH_BANDS, SIMHASH_BITS
 from .artifact import (
-    _SAVED,
     artifact_path,
     load_artifact_meta,
     publish_artifact,

@@ -17,7 +17,7 @@ engine can read it:
   count: enough to refuse a mismatched hash family or torn artifact
   loudly.
 
-Publish is staged + renamed (ann_index._publish_atomically): readers
+Publish is staged + renamed (artifact._publish_atomically): readers
 never observe parquet-without-meta.
 
 100 TB posture: the store is |days|·|groups|·m three-int rows — one
@@ -32,7 +32,6 @@ from pyspark.sql import functions as F
 
 from ..operators.sketch import HLL_M, HLL_P, HLL_WBITS
 from .artifact import (
-    _SAVED,
     artifact_path,
     load_artifact_meta,
     publish_artifact,

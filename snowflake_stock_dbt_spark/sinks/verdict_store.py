@@ -20,7 +20,7 @@ Layout (plain parquet, any engine reads it):
 - ``_META.json``       — modality list + source corpus; a
   family-mismatched load raises instead of silently joining nothing.
 
-Publish is staged + renamed (ann_index._publish_atomically): readers
+Publish is staged + renamed (artifact._publish_atomically): readers
 never observe parquet-without-meta. Idempotent per session (the _SAVED
 memo), rebuilt once per process so a stale on-disk artifact from an
 earlier session can never leak into a fresh run's results.

@@ -237,34 +237,33 @@ ROCKSDB_PROVIDER = (
 )
 
 
-def _drain_scratch_root() -> str | None:
-    """Checkpoint root for drain-to-completion queries.
+def _drain_checkpoint(spark: SparkSession, name: str) -> str | None:
+    """Checkpoint dir for one drain-to-completion query.
 
     These drains already run with FORCE-DELETED temp checkpoints (the
     session sets forceDeleteTempCheckpointLocation) — the checkpoint is
     ephemeral by contract, so its fsync-per-commit cost (offset log,
     commit log, one state-store commit per partition per batch) is pure
     harness I/O. ``SPARK_GRAFT_STREAM_SCRATCH`` points it somewhere
-    cheap — RAM-backed /dev/shm when present (the local default), a
-    fast local disk on a cluster; a PRODUCTION stream that must survive
-    a driver restart passes its durable checkpointLocation explicitly
-    and never goes through this path. Unset/unusable -> None -> Spark's
-    own temp-checkpoint behavior (pre-r12)."""
+    cheap — a fast local disk on a cluster; with a ``local[...]`` master
+    the default is RAM-backed /dev/shm (on a cluster the executors do
+    not share the driver's /dev/shm). A PRODUCTION stream that must
+    survive a driver restart passes its durable checkpointLocation
+    explicitly and never goes through this path. Unset/unusable -> None
+    -> Spark's own temp-checkpoint behavior (pre-r12). The dir sits
+    directly under the scratch root, so removing it leaves nothing."""
     root = os.environ.get("SPARK_GRAFT_STREAM_SCRATCH")
-    if root is None and os.path.isdir("/dev/shm") and os.access(
-        "/dev/shm", os.W_OK
+    if root is None and os.access("/dev/shm", os.W_OK) and (
+        spark.sparkContext.master.startswith("local")
     ):
         root = "/dev/shm"
     if not root:
         return None
-    path = os.path.join(
-        root, f"spark_graft_stream_ckpt_{os.getpid()}"
-    )
     try:
-        os.makedirs(path, exist_ok=True)
+        os.makedirs(root, exist_ok=True)
     except OSError:
         return None
-    return path
+    return os.path.join(root, f"spark_graft_stream_ckpt_{name}")
 
 
 def run_streaming_query(
@@ -300,8 +299,7 @@ def run_streaming_query(
         spark.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
     if state_provider is not None:
         spark.conf.set(provider_key, state_provider)
-    scratch = _drain_scratch_root()
-    ckpt = os.path.join(scratch, name) if scratch else None
+    ckpt = _drain_checkpoint(spark, name)
     try:
         writer = (
             df.writeStream.format("memory")

@@ -1,53 +1,41 @@
-"""bench.py regression-comparator baseline extraction: all three shapes the
-driver has produced (raw line, parsed wrapper, truncated tail)."""
+"""bench.py: the regression-comparator baseline (the BENCH_FULL.json
+committed at HEAD, read through ``git show``) and the stdout summary."""
 
 from __future__ import annotations
 
 import json
+import subprocess
+from types import SimpleNamespace
 
-from bench import _extract_queries
-
-
-def test_extracts_raw_shape(tmp_path):
-    p = tmp_path / "BENCH_r01.json"
-    p.write_text(json.dumps({"metric": "s", "queries": {"q01": 1.5}}))
-    assert _extract_queries(str(p)) == {"q01": 1.5}
+import bench
 
 
-def test_extracts_parsed_wrapper(tmp_path):
-    p = tmp_path / "BENCH_r01.json"
-    p.write_text(json.dumps({"parsed": {"queries": {"q01": 2.0}}, "tail": ""}))
-    assert _extract_queries(str(p)) == {"q01": 2.0}
+def _git_show(monkeypatch, returncode: int, stdout: str) -> None:
+    monkeypatch.setattr(
+        subprocess,
+        "run",
+        lambda *a, **k: SimpleNamespace(returncode=returncode, stdout=stdout),
+    )
 
 
-def test_extracts_truncated_tail(tmp_path):
-    line = json.dumps({"metric": "s", "value": 1, "queries": {"q01": 1.0, "q02": 2.0}, "sf": 0.1})
-    p = tmp_path / "BENCH_r01.json"
-    p.write_text(json.dumps({"tail": line[10:], "parsed": None}))  # cut mid-JSON
-    assert _extract_queries(str(p)) == {"q01": 1.0, "q02": 2.0}
+def test_committed_full_reads_queries_map(monkeypatch):
+    _git_show(monkeypatch, 0, json.dumps(
+        {"queries": {"q01": 1.5}, "micro": {"q01": 1.2, "_commit": "x"},
+         "commit": "abc"}
+    ))
+    assert bench._committed_full() == (
+        {"q01": 1.5}, {"q01": 1.2}, "BENCH_FULL.json@abc"
+    )
 
 
-def test_tail_cut_inside_queries_scavenges_complete_pairs(tmp_path):
-    """A tail truncated mid-object still yields the complete pairs (the
-    driver has recorded front-truncated tails, BENCH_r02.json; a partial
-    baseline beats none)."""
-    line = '{"queries": {"q01": 1.0, "q02"'
-    p = tmp_path / "BENCH_r01.json"
-    p.write_text(json.dumps({"tail": line, "parsed": None}))
-    assert _extract_queries(str(p)) == {"q01": 1.0}
+def test_unparseable_committed_baseline_returns_none(monkeypatch):
+    _git_show(monkeypatch, 0, "not json")
+    assert bench._committed_full() is None
 
 
-def test_front_truncated_tail_scavenges(tmp_path):
-    line = '0.5, "q31_rollup": 1.7, "q32_cube": 0.48, "q33'
-    p = tmp_path / "BENCH_r01.json"
-    p.write_text(json.dumps({"tail": line}))
-    assert _extract_queries(str(p)) == {"q31_rollup": 1.7, "q32_cube": 0.48}
-
-
-def test_unreadable_returns_none(tmp_path):
-    p = tmp_path / "BENCH_r01.json"
-    p.write_text("not json")
-    assert _extract_queries(str(p)) is None
+def test_no_committed_baseline_compares_nothing(monkeypatch):
+    _git_show(monkeypatch, 128, "")
+    assert bench.compare_to_previous_round({"q01": 9.0}) == {}
 
 
 def test_ensure_confs_records_failures():

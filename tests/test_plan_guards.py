@@ -357,9 +357,10 @@ PINNED_PATTERNS = {
     "q325_negative_sampling": ["LeftSemi", "LeftAnti"],
     "q327_prefix_sharing": ["partial_"],
     "q328_padding_waste": ["partial_"],
-    # q331: the run recompute must stay per-user windows + keyed joins
-    # (an inequality replay of history would be quadratic per user).
-    "q331_scd2_incremental": ["Window", "LeftAnti", "LeftSemi"],
+    # q331: the run recompute must stay per-user windows + one keyed
+    # full outer join of history with the batch's runs (an inequality
+    # replay of history would be quadratic per user).
+    "q331_scd2_incremental": ["Window", "FullOuter"],
 }
 
 #: Shuffle-count ceilings for the round-2/3 additions (counted as
@@ -641,12 +642,12 @@ def test_no_eager_actions_at_plan_construction():
 
     - ``groupBy(...).count()`` — a lazy TRANSFORMATION, not an action
       (matched and excluded by the ``groupBy``/agg-chain heuristic);
-    - streaming fixture builders (streaming_plans.py ``_flush_landings``
-      block) — they WRITE a file-feed before any stream exists, so an
-      action is the point;
+    - streaming fixture builders (streaming_plans.py
+      ``_flush_events_landing``) — they WRITE a file-feed before any
+      stream exists, so an action is the point;
     - q118's SemDeDup k-sizing count (vectors.py) — k must be a driver
       int before training (it sizes the seed collect); memoized per
-      (session, corpus) in ``_SEMDEDUP_N_CACHE`` so it runs once.
+      corpus state (``_corpus_rows``) so it runs once.
     """
     import re
     from pathlib import Path

@@ -212,7 +212,6 @@ def test_two_level_beam_verdict_flip_floor(spark):
     old_min, old_env = sim.TWO_LEVEL_MIN_K, dict()
     try:
         sim.TWO_LEVEL_MIN_K = 10**9
-        sim._KMEANS_TRAIN_CACHE.clear()
         flat_assigned, cent = sim.kmeans_assign(
             corpus, k=k, iters=2, return_centroids=True
         )
@@ -291,7 +290,6 @@ def test_q350_equals_q151_when_margin_covers_buckets(spark, oracle_sf_dir):
 
     emb = load_table(spark, oracle_sf_dir, "embeddings")
     k = _size_derived_k(spark, oracle_sf_dir, emb)
-    sim._KMEANS_TRAIN_CACHE.clear()
     b, cent = sim.kmeans_assign(
         emb, k=k, iters=KMEANS_ITERS, return_centroids=True
     )

@@ -198,7 +198,6 @@ def two_level_knn_setup(request):
     corpus = base.withColumn("embedding", emb_expr).localCheckpoint()
     old_min = sim.TWO_LEVEL_MIN_K
     sim.TWO_LEVEL_MIN_K = 16
-    sim._KMEANS_TRAIN_CACHE.clear()
     bucketed, cent = sim.kmeans_assign(
         corpus, k=k, iters=2, return_centroids=True
     )
@@ -339,16 +338,12 @@ def test_bench_summary_line_fits_driver_tail():
 
 def test_bench_baseline_prefers_committed_full(tmp_path, monkeypatch):
     """Once BENCH_FULL.json is committed, the regression baseline is its
-    complete per-query map; before that, the BENCH_r{N} tail scavenge
-    (partial) still works."""
+    complete per-query map; without one the comparison is skipped."""
     import bench
 
     got = bench._committed_full()
     if got is None:
-        # Not yet committed at HEAD (first round with the new contract):
-        # fallback must parse the previous round's tail.
-        prev = bench._extract_queries("/root/repo/BENCH_r10.json")
-        assert prev and "q93_pagerank" in prev
+        assert bench.compare_to_previous_round({"q93_pagerank": 1.0}) == {}
     else:
         qs, micro, label = got
         assert len(qs) >= 300 and label.startswith("BENCH_FULL.json@")

@@ -375,7 +375,7 @@ def test_mutual_nn_symmetric_and_unique(spark, sf_dir):
     k = max(1, math.ceil(emb.count() / SEMDEDUP_TARGET_CLUSTER))
     bucketed, cent = kmeans_assign(
         emb, k=k, iters=KMEANS_ITERS,
-        cache_key=(id(spark), sf_dir, "full"), return_centroids=True,
+        cache_key=(sf_dir, "full"), return_centroids=True,
     )
     top1 = {
         r.src_id: r.dst_id
@@ -415,7 +415,7 @@ def test_cluster_quality_inertia_matches_assignment(spark, sf_dir):
     emb = load_table(spark, sf_dir, "embeddings")
     assigned, cent = kmeans_assign(
         emb, k=KMEANS_K, iters=KMEANS_ITERS,
-        cache_key=(id(spark), sf_dir, "full"), return_centroids=True,
+        cache_key=(sf_dir, "full"), return_centroids=True,
     )
     cent_map = {b: cv for b, cv in cent}
     rows = assigned.select("vec_id", "bucket", "embedding").collect()

@@ -89,7 +89,7 @@ def test_ann_index_round_trip(spark, oracle_sf_dir, tmp_path):
         emb,
         k=KMEANS_K,
         iters=KMEANS_ITERS,
-        cache_key=(id(spark), oracle_sf_dir, "full"),
+        cache_key=(oracle_sf_dir, "full"),
         return_centroids=True,
     )
     path = str(tmp_path / "ivf")
@@ -149,7 +149,7 @@ def test_pq_index_round_trip(spark, oracle_sf_dir, tmp_path):
     from snowflake_stock_dbt_spark.sources.tables import load_table
 
     emb = load_table(spark, oracle_sf_dir, "embeddings")
-    base = (id(spark), oracle_sf_dir)
+    base = (oracle_sf_dir,)
     width = EMBED_DIM // PQ_M
     _, coarse = kmeans_assign(
         emb, k=KMEANS_K, iters=PQ_ITERS, return_centroids=True,
@@ -178,9 +178,9 @@ def test_pq_index_round_trip(spark, oracle_sf_dir, tmp_path):
     bad = json.load(open(f"{path}/_META.json"))
     bad["coarse_k"] += 1
     json.dump(bad, open(f"{path}/_META.json", "w"))
-    from snowflake_stock_dbt_spark.sinks import ann_index
+    from snowflake_stock_dbt_spark.sinks import artifact
 
-    ann_index._SAVED.pop(path, None)
+    artifact._SAVED.pop(path, None)
     with pytest.raises(ValueError, match="corrupt"):
         load_pq_index(spark, path)
 

@@ -56,7 +56,7 @@ def test_ivf_index_path_distinguishes_same_basename(tmp_path):
 
 
 def test_publish_atomically_replaces_stale_artifact(tmp_path):
-    from snowflake_stock_dbt_spark.sinks.ann_index import _publish_atomically
+    from snowflake_stock_dbt_spark.sinks.artifact import _publish_atomically
 
     final = tmp_path / "index"
     stale = final / "_META.json"
@@ -73,7 +73,7 @@ def test_publish_atomically_replaces_stale_artifact(tmp_path):
 def test_publish_atomically_keeps_concurrent_winner(tmp_path, monkeypatch):
     """If the final path re-appears between eviction and our rename (a
     concurrent writer won), ours is discarded and theirs survives."""
-    from snowflake_stock_dbt_spark.sinks import ann_index
+    from snowflake_stock_dbt_spark.sinks import artifact
 
     final = tmp_path / "index"
     staging = tmp_path / "index.tmp.9"
@@ -91,9 +91,9 @@ def test_publish_atomically_keeps_concurrent_winner(tmp_path, monkeypatch):
             raise OSError("target exists")
         return real_rename(src, dst)
 
-    monkeypatch.setattr(ann_index.os, "rename", racing_rename)
+    monkeypatch.setattr(artifact.os, "rename", racing_rename)
     # second attempt fails too, but the winner's meta is present -> no raise
-    ann_index._publish_atomically(str(staging), str(final))
+    artifact._publish_atomically(str(staging), str(final))
     assert (final / "_META.json").read_text() == '{"k": 7}'
     assert not staging.exists()
 

@@ -46,7 +46,6 @@ def test_two_level_exact_at_full_beam(spark, sf_dir, _force_two_level):
     k = max(16, math.ceil(emb.count() / 16))
 
     sim.TWO_LEVEL_MIN_K = 10**9
-    sim._KMEANS_TRAIN_CACHE.clear()
     a1, cent = sim.kmeans_assign(
         emb, k=k, iters=2, attach_centroid=True, return_centroids=True
     )
@@ -84,7 +83,6 @@ def test_two_level_beam_agreement_floor(spark, sf_dir, _force_two_level):
     k = max(16, math.ceil(emb.count() / 16))
 
     sim.TWO_LEVEL_MIN_K = 10**9
-    sim._KMEANS_TRAIN_CACHE.clear()
     a1, cent = sim.kmeans_assign(emb, k=k, iters=2, return_centroids=True)
     flat = {r["vec_id"]: r["bucket"] for r in a1.select("vec_id", "bucket").collect()}
 
@@ -108,7 +106,6 @@ def test_two_level_knn_probes_structure(spark, sf_dir, _force_two_level, nprobe)
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     k = max(16, math.ceil(emb.count() / 16))
-    sim._KMEANS_TRAIN_CACHE.clear()
     a, cent = sim.kmeans_assign(emb, k=k, iters=2, return_centroids=True)
 
     p = sim._with_probes(emb, cent, "embedding", nprobe=nprobe)

@@ -168,3 +168,29 @@ def test_scd2_chain_plan_grows_linearly(spark):
         if n >= 5:
             steps = [b2 - a for a, b2 in zip(leaves[2:], leaves[3:])]
             assert len(set(steps)) == 1, f"leaves per chain length: {leaves}"
+
+
+def test_scd2_extend_chain_plan_grows_linearly(spark):
+    """The same guard for the log-structured extend: each step reads
+    ``history`` once, so a chain of single-event extends grows the
+    analyzed plan by a constant number of leaves per step (an extend
+    that reads it four times measured 9/41/169/681 leaves for 1..4)."""
+    from snowflake_stock_dbt_spark.operators.scd2 import (
+        scd2_extend_from_log,
+        scd2_history_from,
+    )
+
+    def events(n):
+        return spark.createDataFrame(
+            [(1, "red" if n % 2 else "blue", n, f"2024-{n:02d}-01 00:00:00")],
+            "user_id long, event_type string, event_id long, ts string",
+        ).withColumn("ts", F.to_timestamp("ts"))
+
+    hist = scd2_history_from(events(1))
+    leaves = []
+    for n in range(2, 10):
+        hist = scd2_extend_from_log(hist, events(n))
+        leaves.append(_leaf_count(hist))
+        if len(leaves) >= 4:
+            steps = [b2 - a for a, b2 in zip(leaves[1:], leaves[2:])]
+            assert len(set(steps)) == 1, f"leaves per chain length: {leaves}"

@@ -193,6 +193,39 @@ def test_upsert_partitioned_restores_overwrite_mode(spark, tmp_path):
     assert spark.conf.get("spark.sql.sources.partitionOverwriteMode", None) == prior
 
 
+def test_upsert_partitioned_sets_no_session_conf(spark, tmp_path, monkeypatch):
+    """The partition-scoped merge asks for dynamic overwrite on its own
+    writer: it sets and unsets no session conf (a flip would race with
+    other work in the session), and still replaces only the partition
+    it writes."""
+    from pyspark.sql.conf import RuntimeConfig
+
+    path = str(tmp_path / "t")
+    target = spark.createDataFrame(
+        [(1, "a", 1.0), (2, "b", 2.0)], "k long, p string, v double"
+    )
+    merge_upsert_write(spark, path, target, "k", partition_col="p")
+    calls = []
+    real_set, real_unset = RuntimeConfig.set, RuntimeConfig.unset
+
+    def rec_set(self, key, value):
+        calls.append(("set", key))
+        return real_set(self, key, value)
+
+    def rec_unset(self, key):
+        calls.append(("unset", key))
+        return real_unset(self, key)
+
+    monkeypatch.setattr(RuntimeConfig, "set", rec_set)
+    monkeypatch.setattr(RuntimeConfig, "unset", rec_unset)
+    source = spark.createDataFrame([(1, "a", 10.0)], "k long, p string, v double")
+    merge_upsert_write(spark, path, source, "k", partition_col="p")
+    monkeypatch.undo()
+    assert calls == []
+    out = {r["k"]: (r["p"], r["v"]) for r in spark.read.parquet(path).collect()}
+    assert out == {1: ("a", 10.0), 2: ("b", 2.0)}
+
+
 def test_serving_layer_on_star_schema(spark, bronze):
     from snowflake_stock_dbt_spark.serving import apply_filters, distinct_options
 

@@ -428,3 +428,38 @@ def test_sessionize_tws_multi_batch_equals_batch(spark, tmp_path):
         for first, last, n, micro in _fragments_of(pairs, gap_us):
             want.add((u, first, last + gap_us, n, micro / 1_000_000))
     assert got == want
+
+
+def test_drain_leaves_no_checkpoint_dir(spark, sf_dir, tmp_path, monkeypatch):
+    """A drain's checkpoint dir sits directly under the scratch root and
+    is removed with the query: nothing ``spark_graft_stream_ckpt_*`` is
+    left behind, not even a per-process parent dir."""
+    from snowflake_stock_dbt_spark.streaming.pipeline import (
+        run_streaming_query,
+        stream_events,
+    )
+
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SCRATCH", str(tmp_path))
+    counts = stream_events(spark, sf_dir).groupBy("event_type").count()
+    out = run_streaming_query(spark, counts)
+    assert out.count() > 0
+    assert list(tmp_path.glob("spark_graft_stream_ckpt_*")) == []
+
+
+def test_drain_ram_scratch_only_for_local_master(monkeypatch):
+    """/dev/shm is the default scratch root only for a local[...] master:
+    a cluster's executors do not share the driver's /dev/shm. The env
+    var still overrides it."""
+    from types import SimpleNamespace
+
+    from snowflake_stock_dbt_spark.streaming.pipeline import _drain_checkpoint
+
+    def session(master):
+        return SimpleNamespace(sparkContext=SimpleNamespace(master=master))
+
+    monkeypatch.delenv("SPARK_GRAFT_STREAM_SCRATCH", raising=False)
+    assert _drain_checkpoint(session("spark://host:7077"), "q") is None
+    monkeypatch.setenv("SPARK_GRAFT_STREAM_SCRATCH", "/tmp")
+    assert _drain_checkpoint(session("yarn"), "q") == (
+        "/tmp/spark_graft_stream_ckpt_q"
+    )

@@ -55,14 +55,15 @@ def measure_volume(spark, sf_dir: str, balanced: bool) -> dict:
     k = _size_derived_k(spark, sf_dir, emb)
     bucketed, cent = sim.kmeans_assign(
         emb, k=k, iters=KMEANS_ITERS,
-        cache_key=(id(spark), sf_dir, "full"), return_centroids=True,
+        cache_key=(sf_dir, "full"), return_centroids=True,
     )
     if balanced and k >= sim.TWO_LEVEL_MIN_K:
-        pr = sim._with_probes(
-            bucketed, cent, "embedding",
-            max(IVF_NPROBE, sim.BALANCE_SPILL_DEPTH),
-        ).persist()
-        sim._PERSISTED_FRAMES.append(pr)
+        pr = sim.register_persisted(
+            sim._with_probes(
+                bucketed, cent, "embedding",
+                max(IVF_NPROBE, sim.BALANCE_SPILL_DEPTH),
+            )
+        )
         n = pr.count()
         cap = max(1, int(math.ceil(sim.BALANCE_CAP_FACTOR * n / k)))
         posting = sim.balanced_posting(pr, "vec_id", cap).select(

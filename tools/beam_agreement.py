@@ -64,12 +64,13 @@ def _run_arm(
     removes the second cause). ``env`` overlays extra levers for the
     arm (e.g. SPARK_GRAFT_BALANCED_ASSIGN for the --ab=balance mode)."""
     import snowflake_stock_dbt_spark.operators.similarity as sim
+    from snowflake_stock_dbt_spark.sources import tables
 
     os.environ["SPARK_GRAFT_FLAT_ASSIGN"] = "1" if flat else "0"
     for k, v in (env or {}).items():
         os.environ[k] = v
     if not keep_codebook:
-        sim._KMEANS_TRAIN_CACHE.clear()
+        tables._MEMO.clear()
     sim.release_persisted_frames()
     t0 = time.monotonic()
     rows = qfn(spark, sf_dir).collect()

@@ -64,7 +64,7 @@ def main() -> int:
         k = _size_derived_k(spark, d, emb)
         bucketed, cent = sim.kmeans_assign(
             emb, k=k, iters=KMEANS_ITERS,
-            cache_key=(id(spark), d, "full"), return_centroids=True,
+            cache_key=(d, "full"), return_centroids=True,
         )
         bucketed = bucketed.localCheckpoint()
         truth = _true_knn_edges(spark, d)
