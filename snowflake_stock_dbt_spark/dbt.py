@@ -196,7 +196,10 @@ def run_schema_tests(
     deduplication in Spark 4.1 — dim's ``entity_name IS NULL`` count
     silently became 0 while every frame evaluated solo was correct
     (PLANS.md round-4 journal). Per-test jobs sidestep the analyzer
-    hazard and match dbt semantics."""
+    hazard and match dbt semantics. The stock models' own suites
+    (models/stock.py) avoid the hazard differently: each is one
+    ``check_model`` aggregation with no union, joining a relationships
+    parent in as aliased distinct keys."""
     from .quality.checks import not_null, relationships, unique
 
     rows: list[tuple[str, str, str, int]] = []

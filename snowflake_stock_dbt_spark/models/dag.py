@@ -33,7 +33,13 @@ def run_dag(
     run_tests: bool = True,
 ) -> dict[str, DataFrame]:
     """Materialize models in topological order; run each model's check suite
-    after the full build (like ``dbt run`` then ``dbt test``)."""
+    after the full build (like ``dbt run`` then ``dbt test``).
+
+    Every suite runs before any failure is raised, and the
+    ``AssertionError`` names each failing check of every model with its
+    count, as ``dbt test`` reports all failures. The stock models' suites
+    (models/stock.py) are each one ``quality.checks.check_model`` call,
+    so a model's checks cost one Spark action, not one per check."""
     built: dict[str, DataFrame] = dict(sources)
     remaining = list(models)
     while remaining:
@@ -48,7 +54,5 @@ def run_dag(
                 df.createOrReplaceTempView(m.name)
             remaining.remove(m)
     if run_tests:
-        for m in models:
-            if m.checks:
-                run_checks(m.checks(built[m.name], built))
+        run_checks([c for m in models if m.checks for c in m.checks(built[m.name], built)])
     return built

@@ -25,12 +25,7 @@ from ..functions.cleaning import (
 )
 from ..functions.keys import sha_key
 from ..operators.dedup import latest_wins
-from ..quality.checks import (
-    CheckResult,
-    not_null,
-    relationships,
-    unique,
-)
+from ..quality.checks import CheckResult, check_model
 from .dag import Model
 
 
@@ -114,34 +109,28 @@ def fct_observations(inputs: dict[str, DataFrame]) -> DataFrame:
 
 def _stg_checks(df: DataFrame, _: dict[str, DataFrame]) -> list[CheckResult]:
     """schema.yml:16-32."""
-    return [
-        unique(df, "observation_sk"),
-        not_null(df, "observation_sk"),
-        not_null(df, "entity_sk"),
-        not_null(df, "symbol"),
-        not_null(df, "scraped_at"),
-    ]
+    return check_model(
+        df,
+        unique="observation_sk",
+        not_null=["observation_sk", "entity_sk", "symbol", "scraped_at"],
+    )
 
 
 def _dim_checks(df: DataFrame, _: dict[str, DataFrame]) -> list[CheckResult]:
     """schema.yml:34-49."""
-    return [
-        unique(df, "entity_sk"),
-        not_null(df, "entity_sk"),
-        not_null(df, "symbol"),
-        not_null(df, "entity_name"),
-    ]
+    return check_model(
+        df, unique="entity_sk", not_null=["entity_sk", "symbol", "entity_name"]
+    )
 
 
 def _fct_checks(df: DataFrame, built: dict[str, DataFrame]) -> list[CheckResult]:
     """schema.yml:51-76 incl. the relationships test to dim_entity."""
-    return [
-        unique(df, "observation_sk"),
-        not_null(df, "observation_sk"),
-        not_null(df, "entity_sk"),
-        not_null(df, "observation_date"),
-        relationships(df, "entity_sk", built["dim_entity"], "entity_sk"),
-    ]
+    return check_model(
+        df,
+        unique="observation_sk",
+        not_null=["observation_sk", "entity_sk", "observation_date"],
+        relationships=[("entity_sk", built["dim_entity"], "entity_sk")],
+    )
 
 
 def stock_dag() -> list[Model]:

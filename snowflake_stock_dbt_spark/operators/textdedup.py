@@ -26,6 +26,8 @@ plans/llm_text.py do.
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
@@ -204,13 +206,22 @@ def banded_signatures(
     n_hashes) — lets a caller that ALSO consumes the raw signature columns
     (q176's accuracy audit) share one persisted signature pass instead of
     re-running the shingle→hash→64-min pipeline per consumer (opt r12,
-    guide §1.2: don't compute things twice)."""
+    guide §1.2: don't compute things twice). When it is passed, ``k`` is
+    ignored (the frame's shingle size is whatever built it), and a frame
+    without exactly the columns ``h0..h{n_hashes-1}`` raises
+    ``ValueError``."""
     rows = n_hashes // bands
-    sig = (
-        signatures
-        if signatures is not None
-        else minhash_signatures(df, id_col, text_col, k, n_hashes)
-    )
+    if signatures is None:
+        sig = minhash_signatures(df, id_col, text_col, k, n_hashes)
+    else:
+        got = {c for c in signatures.columns if re.fullmatch(r"h\d+", c)}
+        want = {f"h{i}" for i in range(n_hashes)}
+        if got != want:
+            raise ValueError(
+                f"signatures frame must have exactly h0..h{n_hashes - 1}; "
+                f"missing {sorted(want - got)}, unexpected {sorted(got - want)}"
+            )
+        sig = signatures
     # Parsed once per band instead of ~rows py4j calls each (opt r11).
     band_cols = [
         F.expr(
@@ -246,7 +257,9 @@ def minhash_lsh_pairs(
     Returns (doc_a, doc_b, n_shared_bands). Join is on (band_id, band_hash)
     buckets — no quadratic product ever materializes. ``signatures``
     passes a precomputed (ideally persisted) signature frame through to
-    :func:`banded_signatures` for callers that consume it elsewhere too."""
+    :func:`banded_signatures` for callers that consume it elsewhere too;
+    ``k`` is then ignored, and a frame without exactly the columns
+    ``h0..h{n_hashes-1}`` raises ``ValueError``."""
     # Persist the banded signatures: the self-join references them on both
     # sides, and without the persist the whole shingle→hash→64-min pipeline
     # would execute twice (once per join input).

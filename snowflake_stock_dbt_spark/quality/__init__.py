@@ -1,6 +1,7 @@
 from .checks import (
     CheckResult,
     accepted_range,
+    check_model,
     not_null,
     relationships,
     run_checks,
@@ -10,6 +11,7 @@ from .checks import (
 __all__ = [
     "CheckResult",
     "accepted_range",
+    "check_model",
     "not_null",
     "relationships",
     "run_checks",

@@ -20,6 +20,19 @@ import os
 from pyspark.sql import SparkSession
 
 
+def default_driver_memory(phys_bytes: int | None = None) -> str:
+    """The driver heap cap: 48g, or half of physical RAM when that is less.
+
+    local[] mode runs every task in the driver JVM, so a large heap keeps
+    32 concurrent tasks of hash/decimal-heavy work from turning into a GC
+    benchmark. A cap above physical RAM is worse than a small one: on a
+    host without swap the OS kills the JVM before Java can raise an
+    ``OutOfMemoryError``, and the session dies with no Java error."""
+    if phys_bytes is None:
+        phys_bytes = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
+    return f"{min(48 * 1024, phys_bytes // 2**21)}m"
+
+
 def get_spark(
     app_name: str = "snowflake_stock_dbt_spark",
     master: str | None = None,
@@ -65,10 +78,10 @@ def get_spark(
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        # local[] mode runs everything in the driver JVM: size the heap for
-        # 32 concurrent tasks of hash/decimal-heavy work (the box has
-        # 128 GiB; a small heap turns the bench into a GC benchmark).
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "48g"))
+        .config(
+            "spark.driver.memory",
+            os.environ.get("SPARK_GRAFT_DRIVER_MEM") or default_driver_memory(),
+        )
         .config("spark.ui.enabled", "false")
         # Non-ANSI: try_cast-style null-on-malformed matches the reference's
         # TRY_TO_* loading semantics (reference sql/02_load_data.sql:100-107).

@@ -75,6 +75,30 @@ def test_band_id_stays_bigint(spark):
     assert dict(out.dtypes)["band_id"] == "bigint"
 
 
+def test_passed_signatures_must_match_n_hashes(spark):
+    """A signatures= frame without exactly h0..h{n_hashes-1} is rejected
+    at plan build instead of banding the wrong components (ADVICE r12)."""
+    from snowflake_stock_dbt_spark.operators.textdedup import (
+        banded_signatures,
+        minhash_lsh_pairs,
+        minhash_signatures,
+    )
+
+    docs = spark.createDataFrame(
+        [(1, "a b c d e f"), (2, "b c d e f g")], "doc_id long, body string"
+    )
+    sig = minhash_signatures(docs, "doc_id", "body", n_hashes=8)
+    banded_signatures(docs, "doc_id", "body", n_hashes=8, bands=4, signatures=sig)
+    with pytest.raises(ValueError, match="missing.*h8"):
+        banded_signatures(docs, "doc_id", "body", n_hashes=16, bands=4, signatures=sig)
+    with pytest.raises(ValueError, match="unexpected.*h7"):
+        minhash_lsh_pairs(docs, "doc_id", "body", n_hashes=4, bands=2, signatures=sig)
+    with pytest.raises(ValueError, match="missing.*h3"):
+        minhash_lsh_pairs(
+            docs, "doc_id", "body", n_hashes=8, bands=4, signatures=sig.drop("h3")
+        )
+
+
 def test_dot_exact_lits_nonfinite_falls_back(spark):
     from snowflake_stock_dbt_spark.functions.vectors import (
         dot_exact,

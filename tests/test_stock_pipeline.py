@@ -103,6 +103,21 @@ def test_star_schema_build_and_dbt_tests(spark, bronze):
     assert len(sk) == 64 and sk == sk.lower()
 
 
+def test_model_check_suites_fire_few_jobs(spark, bronze):
+    """Each model's check suite is one action: at most 6 Spark jobs (the
+    job-id delta also counts AQE stage and broadcast jobs), where one
+    count() per check fired 16-19."""
+    bronze.count()  # the cache fill is not the suites' work
+    built = run_dag(spark, stock_dag(), {"most_actives_raw": bronze}, run_tests=False)
+    scheduler = spark.sparkContext._jsc.sc().dagScheduler()
+    jobs = {}
+    for m in stock_dag():
+        first = scheduler.nextJobId()
+        run_checks(m.checks(built[m.name], built))
+        jobs[m.name] = scheduler.nextJobId() - first
+    assert all(n <= 6 for n in jobs.values()), jobs
+
+
 def test_latest_wins_dedup_on_reingest(spark, bronze):
     """Re-ingesting the same file with a later ingested_at must not create
     duplicate observations, and the later load must win."""
