@@ -80,7 +80,6 @@ def main() -> None:
 
     total = round(sum(times.values()), 4)
     here = os.path.dirname(os.path.abspath(__file__))
-    micro = _load_micro()
     # FULL per-query payload goes to a repo file the round commits: a
     # 350-query JSON line can never fit in the 2000-char stdout tail the
     # driver records, so BENCH_r{9,10} permanently lost q01-q54 and the
@@ -95,13 +94,6 @@ def main() -> None:
         "cpus": int(os.environ.get("SPARK_GRAFT_CPUS", "32")),
         "commit": _head_commit(),
     }
-    if micro:
-        # Medians-of-isolated-reps for the pinned heavy set
-        # (tools/micro_bench.py) — the noise-proof numbers BENCH_r{N}
-        # comparisons should use for those queries; the suite pass above
-        # times them inside one shared JVM where 14% cross-day noise has
-        # produced repeated false drift alarms.
-        full["micro"] = micro
     # Run-scoped artifact (VERDICT r11 "what's wrong" #2): every run gets
     # its own file keyed by core count + commit, so the driver's own
     # verification runs (32c, then 8c) no longer clobber the committed
@@ -126,8 +118,8 @@ def main() -> None:
     # captures combined output and keeps only the final 2000 chars, so any
     # line printed after the payload evicts it from the recorded
     # BENCH_r{N}.json tail (observed in round 9).
-    movers = compare_to_previous_round(times, micro)
-    line = build_summary_line(total, sf, len(times), full["commit"], movers, micro, times)
+    movers = compare_to_previous_round(times)
+    line = build_summary_line(total, sf, len(times), full["commit"], movers, times)
     sys.stderr.flush()
     print(line)
     sys.stdout.flush()
@@ -139,7 +131,6 @@ def build_summary_line(
     n_queries: int,
     commit: str,
     movers: dict[str, str],
-    micro: dict | None,
     times: dict[str, float] | None = None,
 ) -> str:
     """The one-line stdout payload, guaranteed parseable by the driver:
@@ -155,7 +146,7 @@ def build_summary_line(
     own acceptance bar of >2x AND >0.5s absolute), names exact and
     values in seconds, with the omission declared
     (``queries_omitted``) and the complete map in BENCH_FULL.json.
-    Priority under the budget: queries map > micro medians > top movers.
+    Priority under the budget: queries map > top movers.
     """
     summary = {
         "metric": "query_suite_seconds",
@@ -178,14 +169,6 @@ def build_summary_line(
                 del summary["queries"][name]
                 break
             summary["queries_omitted"] -= 1
-    if micro:
-        trial = dict(summary)
-        trial["micro"] = {
-            k: (v if isinstance(v, str) else round(v, 2))
-            for k, v in micro.items()
-        }
-        if len(json.dumps(trial)) <= budget:
-            summary = trial
     if movers:
         trial = dict(summary)
         trial["top_movers"] = movers
@@ -207,24 +190,8 @@ def _head_commit() -> str:
         return "?"
 
 
-def _load_micro() -> dict[str, float] | None:
-    """Per-query isolated medians from MICRO_BENCH.json (plus commit),
-    if tools/micro_bench.py has been run at this tree."""
-    path = os.path.join(os.path.dirname(os.path.abspath(__file__)),
-                        "MICRO_BENCH.json")
-    try:
-        with open(path) as f:
-            data = json.load(f)
-        return dict(
-            {n: rec["median"] for n, rec in data["queries"].items()},
-            _commit=data.get("commit", "?"),
-        )
-    except Exception:
-        return None
-
-
-def _committed_full() -> tuple[dict[str, float], dict[str, float], str] | None:
-    """(queries, micro, label) from the BENCH_FULL.json committed at git
+def _committed_full() -> tuple[dict[str, float], str] | None:
+    """(queries, label) from the BENCH_FULL.json committed at git
     HEAD — the previous round-close record once rounds >= 11 commit it.
     Reading the COMMITTED version (not the working file this run just
     overwrote) keeps within-round re-runs comparing against the last
@@ -243,20 +210,13 @@ def _committed_full() -> tuple[dict[str, float], dict[str, float], str] | None:
         qs = data.get("queries")
         if not isinstance(qs, dict) or not qs:
             return None
-        micro = {
-            k: float(v)
-            for k, v in (data.get("micro") or {}).items()
-            if not k.startswith("_")
-        }
         label = f"BENCH_FULL.json@{data.get('commit', 'HEAD')}"
-        return {k: float(v) for k, v in qs.items()}, micro, label
+        return {k: float(v) for k, v in qs.items()}, label
     except Exception:
         return None
 
 
-def compare_to_previous_round(
-    times: dict[str, float], micro: dict[str, float] | None = None
-) -> dict[str, str]:
+def compare_to_previous_round(times: dict[str, float]) -> dict[str, str]:
     """Per-query regression report against the previous round's numbers;
     returns the top movers (both directions) for the compact summary.
 
@@ -267,13 +227,6 @@ def compare_to_previous_round(
     suite total hides a single regressed plan, so name each one (ratio > 2x
     and absolute slowdown > 0.5 s — tiny queries are timer noise). Written
     to stderr so the stdout contract stays one JSON line.
-
-    For queries in the pinned micro set, BOTH sides prefer the isolated
-    medians (this run's MICRO_BENCH.json vs the previous round's
-    embedded ``micro`` object): suite-pass numbers for the heavy
-    iterative/stateful plans carry ~14% cross-day JVM/host noise and
-    have produced repeated false drift alarms (round-4 adjudication,
-    PLANS.md) — medians of fresh-process reps are the comparable signal.
     """
     committed = _committed_full()
     if committed is None:
@@ -283,18 +236,11 @@ def compare_to_previous_round(
             file=sys.stderr,
         )
         return {}
-    prev, prev_micro, label = committed
+    prev, label = committed
     regressed = []
     deltas: list[tuple[float, str, float, float]] = []
     for name, sec in sorted(times.items()):
         base = prev.get(name)
-        if (
-            micro
-            and prev_micro
-            and name in micro
-            and name in prev_micro
-        ):
-            sec, base = micro[name], prev_micro[name]
         if not base or base <= 0:
             continue
         if sec / base > 2.0 and sec - base > 0.5:

@@ -10,7 +10,7 @@ check suite; materialization is a temp view (and optionally Parquet).
 from __future__ import annotations
 
 from collections.abc import Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import DataFrame, SparkSession
 
@@ -37,9 +37,10 @@ def run_dag(
 
     Every suite runs before any failure is raised, and the
     ``AssertionError`` names each failing check of every model with its
-    count, as ``dbt test`` reports all failures. The stock models' suites
-    (models/stock.py) are each one ``quality.checks.check_model`` call,
-    so a model's checks cost one Spark action, not one per check."""
+    model and count (``model.check(column)=n``), as ``dbt test`` reports
+    all failures. The stock models' suites (models/stock.py) are each one
+    ``quality.checks.check_model`` call, so a model's checks cost one
+    Spark action, not one per check."""
     built: dict[str, DataFrame] = dict(sources)
     remaining = list(models)
     while remaining:
@@ -54,5 +55,10 @@ def run_dag(
                 df.createOrReplaceTempView(m.name)
             remaining.remove(m)
     if run_tests:
-        run_checks([c for m in models if m.checks for c in m.checks(built[m.name], built)])
+        run_checks([
+            replace(c, check=f"{m.name}.{c.check}")
+            for m in models
+            if m.checks
+            for c in m.checks(built[m.name], built)
+        ])
     return built

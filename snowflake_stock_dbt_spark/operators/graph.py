@@ -1,5 +1,6 @@
-"""[EXT] Iterative graph operators: connected components for near-dup
-group formation.
+"""[EXT] Graph operators: connected components for near-dup group
+formation, k-core peeling, frontier BFS, bounded shortest paths, and the
+lazy-round centralities (PageRank, HITS, label propagation).
 
 A dedup pipeline needs more than candidate pairs (MinHash-LSH, SimHash):
 the pairs form a graph whose CONNECTED COMPONENTS are the duplicate
@@ -8,14 +9,16 @@ doc, drop the rest). No reference analog (the reference's only dedup is a
 keyed latest-wins, sql/02_load_data.sql:109-112); this derives from the
 BASELINE.json north star.
 
-Algorithm: distributed label propagation — every vertex starts labeled
-with itself; each round every vertex takes the min label over itself and
-its neighbors; stop when no label changes. Rounds = graph diameter, which
-for near-dup clusters is tiny (clusters are dense cliques plus chains).
-Each round is one join + one aggregation — both plain DataFrame ops that
-shuffle on the vertex id, so a round scales like any keyed aggregation.
-``localCheckpoint`` truncates the growing lineage every round (the classic
-iterative-algorithm trap: without it, round N replans rounds 1..N-1).
+Every operator that iterates to a fixpoint or to a round budget (both
+connected-components algorithms, ``k_core``, ``bfs_hops``,
+``sssp_bounded``) runs one loop, :func:`_fixpoint`: each round is a lazy
+``step`` materialized by one eager ``localCheckpoint`` (truncating the
+lineage, or round N would replan rounds 1..N-1), and that same job
+computes the round's signature through ``observe``, so probing
+convergence costs no job of its own. The loop stops when the signature
+repeats. Out of rounds, a fixpoint operator (either CC algorithm,
+``k_core``) raises ``RuntimeError``; a bounded one (``bfs_hops``,
+``sssp_bounded``) returns its state at the budget, as its contract says.
 
 At 100 TB: the label frame is |V| rows (one per doc in any candidate
 pair), edges |E| rows; both shuffle-partition by id. For pathological
@@ -26,8 +29,64 @@ primitive ops, O(log²) rounds; near-dup graphs never need it.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Observation, Window
+from collections.abc import Callable
+
+from pyspark.sql import Column, DataFrame, Observation
 from pyspark.sql import functions as F
+
+# Frames of at most this many vertices are broadcast to the edges each
+# round instead of shuffling the edge table; past it the joins fall back
+# to ordinary shuffles (the general-scale path).
+_BROADCAST_MAX_NODES = 5_000_000
+
+
+def _checkpoint(df: DataFrame, *aggs: Column) -> tuple[DataFrame, tuple]:
+    """``df`` materialized by one eager ``localCheckpoint``, and the values
+    of ``aggs`` over it, computed by that same job through ``observe``."""
+    obs = Observation()
+    out = df.observe(obs, *aggs).localCheckpoint()
+    return out, tuple(obs.get.values())
+
+
+def _fixpoint(
+    state: DataFrame,
+    sig: tuple,
+    step: Callable[[DataFrame, int], DataFrame],
+    rounds: int,
+    *signature: Column,
+) -> tuple[DataFrame, int, bool]:
+    """Iterate ``state = step(state, r)`` for r = 1..``rounds``, each round
+    checkpointed with its ``signature`` observed (:func:`_checkpoint`);
+    ``state`` comes materialized with ``sig``, its signature values.
+
+    Returns (state, rounds that changed it, converged): converged when a
+    round's signature repeats the previous one, which ends the loop."""
+    for r in range(1, rounds + 1):
+        state, new = _checkpoint(step(state, r), *signature)
+        if new == sig:
+            return state, r - 1, True
+        sig = new
+    return state, rounds, False
+
+
+def _undirected(edges: DataFrame, src: str, dst: str) -> DataFrame:
+    """Each undirected edge once, as (u, v) with u <= v; a self-loop stays
+    as (u, u)."""
+    return edges.select(
+        F.least(src, dst).alias("u"), F.greatest(src, dst).alias("v")
+    ).distinct()
+
+
+def _vertices(
+    e: DataFrame, vertices: DataFrame | None = None, id_col: str = "id"
+) -> DataFrame:
+    """Distinct ``id`` of every endpoint of the (u, v) edges ``e``, plus the
+    ``id_col`` of ``vertices`` when given. One single-branch explode, not
+    a union of two projections of ``e`` (the self-union hazard below)."""
+    ids = e.select(F.explode(F.array("u", "v")).alias("id"))
+    if vertices is not None:
+        ids = ids.union(vertices.select(F.col(id_col).alias("id")))
+    return ids.distinct()
 
 
 def connected_components(
@@ -37,7 +96,6 @@ def connected_components(
     vertices: DataFrame | None = None,
     id_col: str = "id",
     max_iter: int = 25,
-    broadcast_max_nodes: int = 5_000_000,
     algorithm: str = "label-prop",
     _stats: dict | None = None,
 ) -> DataFrame:
@@ -58,73 +116,82 @@ def connected_components(
       diameters (a length-n chain needs n label-prop rounds but ~log²
       two-phase rounds; measured in tests/test_graph.py and PLANS.md).
 
-    Both produce identical labels (min id per component). ``_stats``
-    (optional dict) receives ``{"rounds": N}`` for probe tests.
-
-    The label frame is |V| rows; when the (driver-counted) vertex count is
-    broadcast-sized, each round ships labels to the edges instead of
-    shuffling the edge table — same adaptive choice as :func:`pagerank`.
-    Past the threshold the join falls back to an ordinary shuffle.
+    Both produce identical labels (min id per component) and raise
+    ``RuntimeError`` when ``max_iter`` rounds end unconverged. ``_stats``
+    (optional dict) receives ``{"rounds": N}``, the rounds that changed
+    the state, for probe tests.
     """
     if algorithm == "two-phase":
-        return _cc_two_phase(
-            edges, src, dst, vertices, id_col, max_iter, _stats
+        labels, rounds, converged = _cc_two_phase(
+            edges, src, dst, vertices, id_col, max_iter
         )
-    if algorithm != "label-prop":
+    elif algorithm == "label-prop":
+        labels, rounds, converged = _cc_label_prop(
+            edges, src, dst, vertices, id_col, max_iter
+        )
+    else:
         raise ValueError(f"unknown algorithm {algorithm!r}")
+    if not converged:
+        raise RuntimeError(
+            f"{algorithm} connected components did not converge in "
+            f"{max_iter} rounds"
+        )
+    if _stats is not None:
+        _stats["rounds"] = rounds
+    return labels
+
+
+def _cc_label_prop(
+    edges: DataFrame,
+    src: str,
+    dst: str,
+    vertices: DataFrame | None,
+    id_col: str,
+    max_iter: int,
+) -> tuple[DataFrame, int, bool]:
+    """Min-label propagation: every vertex starts labeled with itself; each
+    round every vertex takes the min label over itself and its neighbors
+    (one join + one aggregation, both shuffling on the vertex id). Labels
+    only fall, so an unchanged (count, sum) signature is an unchanged
+    labeling.
+
+    The label frame is |V| rows; when the vertex count (observed by the
+    initial checkpoint) is broadcast-sized, each round ships labels to
+    the edges instead of shuffling the edge table — same adaptive choice
+    as :func:`pagerank`."""
+    # Persisted BEFORE the initial labels are derived from it: the labels
+    # and every round read it, and an unpersisted edge frame would re-run
+    # the caller's upstream pipeline for each.
     sym = (
-        edges.select(F.col(src).alias("a"), F.col(dst).alias("b"))
-        .union(edges.select(F.col(dst).alias("a"), F.col(src).alias("b")))
+        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
+        .union(edges.select(F.col(dst).alias("u"), F.col(src).alias("v")))
         .distinct()
         .persist()
     )
-    labels = sym.select(F.col("a").alias("id")).distinct()
-    if vertices is not None:
-        labels = labels.union(
-            vertices.select(F.col(id_col).alias("id"))
-        ).distinct()
-    labels = labels.withColumn("component", F.col("id")).localCheckpoint()
-    small = labels.count() <= broadcast_max_nodes
-    bcast = F.broadcast if small else (lambda df: df)
+    signature = (
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("component").cast("decimal(38,0)")).alias("s"),
+    )
+    labels, sig = _checkpoint(
+        _vertices(sym, vertices, id_col).withColumn("component", F.col("id")),
+        *signature,
+    )
+    bcast = F.broadcast if sig[0] <= _BROADCAST_MAX_NODES else (lambda df: df)
 
-    for _ in range(max_iter):
-        # Labels flowing across edges: neighbor's current component.
-        flowed = (
-            sym.join(bcast(labels), sym.b == labels.id)
-            .select(F.col("a").alias("id"), "component", F.lit(False).alias("is_old"))
+    def step(labels: DataFrame, _r: int) -> DataFrame:
+        # Labels flowing across edges: each neighbor's current component.
+        flowed = sym.join(bcast(labels), sym.v == labels.id).select(
+            F.col("u").alias("id"), "component"
         )
-        # The vertex's previous label rides along tagged is_old, so the same
-        # min-aggregation yields both the new label and the old one —
-        # and convergence detection is FUSED into the checkpoint's own
-        # materialization job via observe() (CollectMetrics fires on the
-        # eager localCheckpoint action), so each round costs ONE job, not
-        # a checkpoint plus a changed-count scan (optimization r12,
-        # VERDICT r11 item 5).
-        obs = Observation()
-        merged = (
-            labels.select("id", "component", F.lit(True).alias("is_old"))
-            .union(flowed)
+        return (
+            labels.union(flowed)
             .groupBy("id")
-            .agg(
-                F.min("component").alias("component"),
-                F.min(F.when(F.col("is_old"), F.col("component"))).alias(
-                    "old_component"
-                ),
-            )
-            .observe(
-                obs,
-                F.count(
-                    F.when(F.col("component") != F.col("old_component"), 1)
-                ).alias("changed"),
-            )
-            .localCheckpoint()
+            .agg(F.min("component").alias("component"))
         )
-        changed = obs.get["changed"]
-        labels = merged.select("id", "component")
-        if changed == 0:
-            break
+
+    out = _fixpoint(labels, sig, step, max_iter, *signature)
     sym.unpersist()
-    return labels
+    return out
 
 
 def _cc_two_phase(
@@ -134,8 +201,7 @@ def _cc_two_phase(
     vertices: DataFrame | None,
     id_col: str,
     max_iter: int,
-    _stats: dict | None,
-) -> DataFrame:
+) -> tuple[DataFrame, int, bool]:
     """Alternating large-star/small-star connected components.
 
     Per round (both stars are one keyed agg + one equi-join, shuffling
@@ -151,17 +217,17 @@ def _cc_two_phase(
     minimum in O(log²) rounds regardless of diameter (Kiveris et al.
     SoCC'14, Thm 2). Convergence = edge multiset unchanged, detected
     with a count + hash-sum signature (one aggregation — no |E|⋈|E|
-    set-compare). Raises after ``max_iter`` non-converged rounds rather
-    than returning partial labels.
+    set-compare). The first round drops self-loops; the initial frame
+    keeps them, so it still holds every vertex for the final labeling,
+    and the signature skips them, so an input that is already flat stars
+    converges in the first round.
     """
-    spark = edges.sparkSession
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint()
+    edge = F.col("u") != F.col("v")
+    signature = (
+        F.count(F.when(edge, 1)).alias("n"),
+        F.sum(F.when(edge, F.xxhash64("u", "v")).cast("decimal(38,0)")).alias("h"),
     )
+    e0, sig = _checkpoint(_undirected(edges, src, dst), *signature)
 
     def large_star(d: DataFrame) -> DataFrame:
         # Symmetrize via a single-branch struct explode, NOT a union with
@@ -208,47 +274,9 @@ def _cc_two_phase(
             F.least("a", "b").alias("u"), F.greatest("a", "b").alias("v")
         ).distinct()
 
-    def signature(d: DataFrame):
-        row = d.agg(
-            F.count("*").alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")), F.lit(0)
-            ).alias("h"),
-        ).first()
-        return (row["n"], row["h"])
-
-    def checkpoint_with_signature(d: DataFrame):
-        # Convergence signature FUSED into the checkpoint job (observe
-        # fires on the eager localCheckpoint): one job per round instead
-        # of checkpoint + signature scan (optimization r12).
-        obs = Observation()
-        out = d.observe(
-            obs,
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(
-                F.sum(F.xxhash64("u", "v").cast("decimal(38,0)")), F.lit(0)
-            ).alias("h"),
-        ).localCheckpoint()
-        m = obs.get
-        return out, (m["n"], m["h"])
-
-    sig = signature(e)
-    rounds = 0
-    for _ in range(max_iter):
-        if sig[0] == 0:
-            break
-        e, new_sig = checkpoint_with_signature(small_star(large_star(e)))
-        rounds += 1
-        if new_sig == sig:
-            break
-        sig = new_sig
-    else:
-        raise RuntimeError(
-            f"two-phase connected components did not converge in "
-            f"{max_iter} rounds"
-        )
-    if _stats is not None:
-        _stats["rounds"] = rounds
+    e, rounds, converged = _fixpoint(
+        e0, sig, lambda d, _r: small_star(large_star(d)), max_iter, *signature
+    )
 
     # Converged state: flat stars (child > center edges). Children label
     # with their center; centers and isolated vertices label themselves.
@@ -259,15 +287,10 @@ def _cc_two_phase(
         child.groupBy("id").agg(F.min("component").alias("component"))
         .where(F.col("component") < F.col("id"))
     )
-    nodes = e.select(F.col("u").alias("id")).union(
-        e.select(F.col("v").alias("id"))
-    )
-    if vertices is not None:
-        nodes = nodes.union(vertices.select(F.col(id_col).alias("id")))
-    nodes = nodes.distinct()
-    return nodes.join(child, "id", "left").select(
+    labels = _vertices(e0, vertices, id_col).join(child, "id", "left").select(
         "id", F.coalesce("component", F.col("id")).alias("component")
     )
+    return labels, rounds, converged
 
 
 def k_core(
@@ -290,17 +313,12 @@ def k_core(
     peeling that reaches convergence produces the identical node set.
     Rounds are bounded by the longest peeling cascade (typically a
     handful; the degree distribution collapses geometrically), each
-    round is 2 shuffles, and lineage is truncated per round. Returns
+    round is one checkpoint, truncating the lineage. Edges only
+    leave, so an unchanged edge count is the fixpoint. Returns
     (node_id, core_degree) — degree WITHIN the core. Raises after
     ``max_iter`` non-converged rounds rather than returning a
-    non-fixpoint."""
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .select(F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v"))
-        .distinct()
-        .localCheckpoint()
-    )
+    non-fixpoint; ``_stats`` receives the peeling rounds that removed
+    something."""
 
     def degrees(d: DataFrame) -> DataFrame:
         # Single-branch endpoint explode (the triangle_counts idiom) —
@@ -314,35 +332,18 @@ def k_core(
             .agg(F.count("*").alias("d"))
         )
 
-    rounds = 0
-    for _ in range(max_iter):
-        # The below-k convergence probe is FUSED into keep's own
-        # materialization (observe over the degree stream BEFORE the
-        # filter, metrics delivered by the eager localCheckpoint job):
-        # two jobs per round instead of three, and the final converged
-        # round costs one (optimization r12, VERDICT r11 item 5). keep
-        # derives from e itself — checkpointed BEFORE semi-joining back
-        # so the join's binding is unambiguous (same hazard family as
-        # the degree explode above).
-        obs = Observation()
-        keep = (
-            degrees(e)
-            .observe(
-                obs, F.count(F.when(F.col("d") < k, 1)).alias("n_below")
-            )
-            .where(F.col("d") >= k)
-            .select(F.col("n").alias("u"))
-            .localCheckpoint()
+    def peel(e: DataFrame, _r: int) -> DataFrame:
+        keep = degrees(e).where(F.col("d") >= k).select(F.col("n").alias("u"))
+        return e.join(keep, "u", "left_semi").join(
+            keep.select(F.col("u").alias("v")), "v", "left_semi"
         )
-        if obs.get["n_below"] == 0:
-            break
-        e = (
-            e.join(keep, "u", "left_semi")
-            .join(keep.select(F.col("u").alias("v")), "v", "left_semi")
-            .localCheckpoint()
-        )
-        rounds += 1
-    else:
+
+    n_edges = F.count(F.lit(1)).alias("n")
+    e, sig = _checkpoint(
+        _undirected(edges, src, dst).where(F.col("u") < F.col("v")), n_edges
+    )
+    e, rounds, converged = _fixpoint(e, sig, peel, max_iter, n_edges)
+    if not converged:
         raise RuntimeError(f"k-core did not converge in {max_iter} rounds")
     if _stats is not None:
         _stats["rounds"] = rounds
@@ -388,7 +389,6 @@ def pagerank(
     dst: str = "dst",
     iters: int = 3,
     damping: float = 0.85,
-    broadcast_max_nodes: int = 5_000_000,
     edges_distinct: bool = False,
 ) -> DataFrame:
     """(id, rank) after ``iters`` synchronous PageRank iterations.
@@ -408,8 +408,9 @@ def pagerank(
     cluster sizes. The quantization error (≤1e-12 per edge) is far below
     any ranking-relevant difference.
 
-    The vertex count is collected once at setup (one count job); a fixed
-    scalar beats re-deriving |V| with a broadcast join every round.
+    The vertex count is observed once at setup, by the vertex frame's own
+    checkpoint job; a fixed scalar beats re-deriving |V| with a broadcast
+    join every round.
 
     Release contract: the edge frames stay persisted after the caller's
     action until ``release_persisted_frames()`` or ``clearCache()``.
@@ -431,21 +432,14 @@ def pagerank(
     # Attach the out-degree to each edge ONCE — the per-round work is then
     # a single join (weighted edges ⋈ ranks), not two.
     ew = register_persisted(e.join(deg, "u"))
-    nodes = (
-        e.select(F.col("u").alias("id"))
-        .union(e.select(F.col("v").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
-    n = nodes.count()
+    nodes, (n,) = _checkpoint(_vertices(e), F.count(F.lit(1)).alias("n"))
     # The rank and incoming-sum frames are |V| rows. When |V| is known
-    # (we just counted it) to be broadcast-sized, ship them to the edges
+    # (just observed) to be broadcast-sized, ship them to the edges
     # instead of shuffling the edge table every round — the per-round cost
     # drops to one map-side-combined aggregation. Past the threshold the
     # joins fall back to ordinary shuffles (the general-scale path).
-    small = n <= broadcast_max_nodes
-    bcast = F.broadcast if small else (lambda df: df)
-    ranks = nodes.withColumn("rank", F.lit(1.0 / n)).localCheckpoint()
+    bcast = F.broadcast if n <= _BROADCAST_MAX_NODES else (lambda df: df)
+    ranks = nodes.withColumn("rank", F.lit(1.0 / n))
     teleport = (1.0 - damping) / n
     # The round recurrence is LINEAR — each round's ranks frame is
     # consumed exactly once (by the next round's contribution join) — so
@@ -495,14 +489,7 @@ def triangle_counts(edges: DataFrame, src: str = "src", dst: str = "dst") -> Dat
     Plan: 2 keyed aggs (degrees, final count) + 2 equi-joins (wedge
     close), all broadcast-free and partitioned on join keys.
     """
-    e = (
-        edges.select(F.col(src).alias("u"), F.col(dst).alias("v"))
-        .where(F.col("u") != F.col("v"))
-        .select(
-            F.least("u", "v").alias("u"), F.greatest("u", "v").alias("v")
-        )
-        .distinct()
-    )
+    e = _undirected(edges, src, dst).where(F.col("u") < F.col("v"))
     deg = (
         e.select(F.explode(F.array("u", "v")).alias("n"))
         .groupBy("n")
@@ -578,13 +565,8 @@ def hits(
         raise ValueError(f"hits() needs iters >= 1, got {iters}")
     e = edges.select(F.col(src).alias("u"), F.col(dst).alias("v")).distinct()
     e = e.persist()
-    nodes = (
-        e.select(F.col("u").alias("id"))
-        .union(e.select(F.col("v").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
-    hub = nodes.withColumn("score", F.lit(1.0)).localCheckpoint()
+    nodes = _vertices(e).localCheckpoint()
+    hub = nodes.withColumn("score", F.lit(1.0))
 
     def half_round(scores: DataFrame, send: str, recv: str) -> DataFrame:
         """Push ``scores`` (keyed by node id) along edges from ``send``
@@ -663,13 +645,8 @@ def label_propagation(
     # references e once per round and executes at the CALLER's action,
     # after this function returned (see pagerank).
     e = register_persisted(e)
-    nodes = (
-        e.select(F.col("u").alias("id"))
-        .union(e.select(F.col("v").alias("id")))
-        .distinct()
-        .localCheckpoint()
-    )
-    labels = nodes.withColumn("label", F.col("id")).localCheckpoint()
+    nodes = _vertices(e).localCheckpoint()
+    labels = nodes.withColumn("label", F.col("id"))
     # Nodes with NO in-edges can never receive a contribution, so their
     # per-round fallback label is always their own id — a STATIC frame.
     # Computing it once turns the old per-round nodes⋈picked left join
@@ -735,18 +712,19 @@ def bfs_hops(
     "within N hops of X" questions (supply-chain blast radius, fraud
     neighborhoods, k-hop feature extraction for graph ML).
 
-    Frontier algorithm: round ``d`` expands only the vertices first
-    reached at ``d-1`` (one equi-join edges⋈frontier on the source
+    Frontier algorithm: round ``d`` expands only the visited rows with
+    ``hop == d-1`` (one equi-join edges⋈frontier on the source
     endpoint), then anti-joins the visited set so each vertex is stamped
     exactly once, at its first (= minimum) hop — no per-vertex min agg
     over all paths is ever materialized, unlike the naive "expand
     everything and MIN()" formulation whose intermediate grows with path
-    multiplicity. ``localCheckpoint`` truncates lineage per round (the
-    iterative-algorithm trap, see module docstring).
+    multiplicity. The visited count is the round signature, so the loop
+    ends at the first round that reaches no new vertex, or at
+    ``max_hops``.
 
     At 100 TB: each round shuffles |frontier⋈edges| rows keyed on vertex
     id — the pagerank shuffle shape, but only on the expanding wavefront,
-    so total work is O(|E| reached) across all rounds, not O(|E| x
+    so the join work is O(|E| reached) across all rounds, not O(|E| x
     rounds). The visited set stays (id, hop) — two longs per reached
     vertex.
     """
@@ -755,31 +733,29 @@ def bfs_hops(
         .distinct()
         .persist()
     )
-    visited = (
-        seeds.select(F.col(id_col).alias("id"))
-        .distinct()
-        .withColumn("hop", F.lit(0).cast("int"))
-        .localCheckpoint()
-    )
-    frontier = visited.select("id")
-    for d in range(1, max_hops + 1):
-        reached = (
-            e.join(frontier.withColumnRenamed("id", "u"), "u")
-            .select(F.col("v").alias("id"))
-            .distinct()
+
+    def expand(visited: DataFrame, d: int) -> DataFrame:
+        frontier = visited.where(F.col("hop") == d - 1).select(
+            F.col("id").alias("u")
         )
         fresh = (
-            reached.join(visited, "id", "left_anti")
-            .withColumn("hop", F.lit(d).cast("int"))
-            .localCheckpoint()
+            e.join(frontier, "u")
+            .select(F.col("v").alias("id"))
+            .distinct()
+            .join(visited, "id", "left_anti")
         )
-        # visited stays a UNION of the per-round checkpointed leaves
-        # (≤ max_hops distinct LogicalRDDs — no shared lineage, so the
-        # round-4 self-union mis-binding hazard doesn't apply, and the
-        # plan depth is bounded by the hop budget): one action per round
-        # instead of two (optimization r12, VERDICT r11 item 5).
-        visited = visited.unionByName(fresh)
-        frontier = fresh.select("id")
+        return visited.unionByName(
+            fresh.withColumn("hop", F.lit(d).cast("int"))
+        )
+
+    n_visited = F.count(F.lit(1)).alias("n")
+    visited, sig = _checkpoint(
+        seeds.select(F.col(id_col).alias("id"))
+        .distinct()
+        .withColumn("hop", F.lit(0).cast("int")),
+        n_visited,
+    )
+    visited, _, _ = _fixpoint(visited, sig, expand, max_hops, n_visited)
     e.unpersist()
     return visited
 
@@ -803,7 +779,9 @@ def sssp_bounded(
     equi-join on the source endpoint) and folds with MIN keyed on the
     vertex id — after round r, cost(id) is exactly the cheapest path
     using <= r edges, which is the invariant the unrolled-CTE oracle
-    replays. ``localCheckpoint`` truncates lineage between rounds.
+    replays. Costs only fall and rows only arrive, so an unchanged
+    (count, sum(cost)) signature means no path improved and the loop
+    ends before the budget.
 
     At 100 TB: the reach frame is (id, cost) — two longs per reached
     vertex; each round shuffles |reach ⋈ edges| + |reach| rows keyed on
@@ -812,22 +790,28 @@ def sssp_bounded(
     e = edges.select(
         F.col(src).alias("u"), F.col(dst).alias("v"), F.col(weight).alias("w")
     ).persist()
-    dist = (
-        seeds.select(F.col(id_col).alias("id"))
-        .distinct()
-        .withColumn("cost", F.lit(0).cast("long"))
-        .localCheckpoint()
-    )
-    for _ in range(rounds):
+
+    def relax(dist: DataFrame, _r: int) -> DataFrame:
         relaxed = e.join(dist.withColumnRenamed("id", "u"), "u").select(
             F.col("v").alias("id"),
             (F.col("cost") + F.col("w")).cast("long").alias("cost"),
         )
-        dist = (
+        return (
             dist.unionByName(relaxed)
             .groupBy("id")
             .agg(F.min("cost").alias("cost"))
-            .localCheckpoint()
         )
+
+    signature = (
+        F.count(F.lit(1)).alias("n"),
+        F.sum(F.col("cost").cast("decimal(38,0)")).alias("s"),
+    )
+    dist, sig = _checkpoint(
+        seeds.select(F.col(id_col).alias("id"))
+        .distinct()
+        .withColumn("cost", F.lit(0).cast("long")),
+        *signature,
+    )
+    dist, _, _ = _fixpoint(dist, sig, relax, rounds, *signature)
     e.unpersist()
     return dist

@@ -20,12 +20,9 @@ def _git_show(monkeypatch, returncode: int, stdout: str) -> None:
 
 def test_committed_full_reads_queries_map(monkeypatch):
     _git_show(monkeypatch, 0, json.dumps(
-        {"queries": {"q01": 1.5}, "micro": {"q01": 1.2, "_commit": "x"},
-         "commit": "abc"}
+        {"queries": {"q01": 1.5}, "commit": "abc"}
     ))
-    assert bench._committed_full() == (
-        {"q01": 1.5}, {"q01": 1.2}, "BENCH_FULL.json@abc"
-    )
+    assert bench._committed_full() == ({"q01": 1.5}, "BENCH_FULL.json@abc")
 
 
 def test_unparseable_committed_baseline_returns_none(monkeypatch):
@@ -70,7 +67,7 @@ def test_summary_line_carries_parseable_queries_map():
 
     times = {f"q{i:03d}_{'x' * 16}": 0.01 * i for i in range(1, 352)}
     line = build_summary_line(
-        sum(times.values()), 0.1, len(times), "abc1234", {}, None, times
+        sum(times.values()), 0.1, len(times), "abc1234", {}, times
     )
     assert len(line) <= 1900
     parsed = json.loads(line)
@@ -90,9 +87,8 @@ def test_summary_line_small_suite_includes_everything():
     from bench import build_summary_line
 
     times = {"q01_small": 1.0, "q02_other": 2.0}
-    line = build_summary_line(3.0, 0.1, 2, "abc", {"q01_small": "1->1"},
-                              {"q01_small": 1.0, "_commit": "abc"}, times)
+    line = build_summary_line(3.0, 0.1, 2, "abc", {"q01_small": "1->1"}, times)
     parsed = json.loads(line)
     assert parsed["queries"] == {"q01_small": 1.0, "q02_other": 2.0}
     assert parsed["queries_omitted"] == 0
-    assert "micro" in parsed and "top_movers" in parsed
+    assert "top_movers" in parsed

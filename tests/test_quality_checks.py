@@ -221,7 +221,7 @@ def test_run_dag_raises_naming_every_failing_check(spark, star):
     models, src, built = star
     collected = {m.name: built[m.name].collect() for m in models}
     failing = [
-        f"{check}({column})={n}"
+        f"{m.name}.{check}({column})={n}"
         for m in models
         for check, column, n in _expected_suite(m.name, collected)
         if n

@@ -322,11 +322,9 @@ def test_bench_summary_line_fits_driver_tail():
 
     import bench
 
-    micro = {f"q{300 + i}_some_long_query_name_here": 123.4567 for i in range(30)}
-    micro["_commit"] = "abcdef0"
     movers = {f"q{100 + i}_another_long_query_name": "123.45->678.90" for i in range(10)}
     times = {f"q{i:03d}_some_long_query_name_here": 0.01 * i for i in range(350)}
-    line = bench.build_summary_line(412.63, 0.1, 350, "abcdef0", movers, micro, times)
+    line = bench.build_summary_line(412.63, 0.1, 350, "abcdef0", movers, times)
     assert len(line) < 2000
     d = json.loads(line)
     assert d["n_queries"] == 350 and d["full"] == "BENCH_FULL.json"
@@ -345,7 +343,7 @@ def test_bench_baseline_prefers_committed_full(tmp_path, monkeypatch):
     if got is None:
         assert bench.compare_to_previous_round({"q93_pagerank": 1.0}) == {}
     else:
-        qs, micro, label = got
+        qs, label = got
         assert len(qs) >= 300 and label.startswith("BENCH_FULL.json@")
 
 

@@ -896,26 +896,6 @@ def test_q336_estimate_is_in_hll_error_band(spark, oracle_sf_dir):
         assert abs(r["err_ppm"]) < 520_000, dict(r.asDict())
 
 
-# --- micro_bench: scoped runs merge, never clobber ------------------------------
-
-
-def test_micro_bench_scoped_run_merges(tmp_path):
-    import json
-
-    from tools.micro_bench import merged_results
-
-    out = tmp_path / "MICRO_BENCH.json"
-    out.write_text(
-        json.dumps({"queries": {"qA": {"median": 1.0}, "qB": {"median": 2.0}}})
-    )
-    got = merged_results({"qA": {"median": 1.5}}, True, str(out))
-    assert got == {"qA": {"median": 1.5}, "qB": {"median": 2.0}}
-    # full-rotation runs still replace wholesale
-    assert merged_results({"qA": {"median": 9.0}}, False, str(out)) == {
-        "qA": {"median": 9.0}
-    }
-
-
 # --- q337: bucketed co-located join ---------------------------------------------
 
 
